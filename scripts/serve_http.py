@@ -15,8 +15,10 @@ Run:
 This is a serving-demo tier, not the analytics path: a production deployment
 would precompute the index tables once (index_incremental + store_pagerank)
 and keep them cached — done here at startup. The reference's Caffeine result
-cache (SearchController.java:28-33) maps to a plain dict keyed the same way
-(query, page, per_page), capped FIFO.
+cache (SearchController.java:28-33) maps to a plain dict, capped FIFO, keyed
+(snapshot_id, query, page, per_page): a new index_incremental /
+store_pagerank commit changes the latest snapshot id, so answers cached
+against an older snapshot are never served again.
 """
 
 from __future__ import annotations
@@ -36,6 +38,9 @@ CACHE_MAX = 3000  # SearchController.java:28-33 (Caffeine max size)
 def make_handler(spark, state_dir: str):
     import threading
 
+    from sher_look_spark.crawler.storage import SnapshotStore
+
+    store = SnapshotStore(state_dir)
     cache: dict[tuple, list[dict]] = {}
     # ThreadingHTTPServer serves concurrent requests off this one dict —
     # guard get/put so eviction and insertion cannot race
@@ -57,7 +62,10 @@ def make_handler(spark, state_dir: str):
             except ValueError:
                 self.send_error(400, "page and resultsPerPage must be positive integers")
                 return
-            key = (query, page, per_page)
+            # search_pages may read a snapshot newer than this id, never an
+            # older one, so an entry is never staler than its key
+            snap = store.latest()
+            key = (snap.snapshot_id if snap else None, query, page, per_page)
             with cache_lock:
                 hit = cache.get(key)
             if hit is None:

@@ -19,14 +19,17 @@ Crawl order is BY CONSTRUCTION the reference's single-threaded FIFO order:
 (parent_rank, document_position) order), so sorting by (wave, rank) equals
 the reference's poll order — verified against the pure-Python simulator.
 
-Scale notes (10^10-URL frontier, 1000 executors):
-* the only big shuffles per wave are the `seen` anti-join and the child
-  dedup — both hash-partitioned on url_hash/url; AQE skew-join splits hot
-  hosts, and `fetch` is salted round-robin so one hot host cannot pin a task;
-* child rank assignment uses sort + zipWithIndex (distributed two-pass),
-  NOT a single-partition window;
-* `seen` stays partitioned on disk by pmod(url_hash, N) so the anti-join
-  can co-locate (bucketed-table MERGE under Iceberg on a real cluster).
+Every operator has ONE code path:
+* the URL-seen check is an exact `left_anti` join on url_hash — the
+  reference's exact in-memory seen set (CrawlTask.java:82-93);
+* politeness slots are a row_number over `Window.partitionBy("host")`;
+* child discovery ranks are per-parent offsets: the per-parent counts (one
+  row per committed parent) prefix-summed in one window, resolved lazily
+  inside the concurrent write pool.
+
+The big shuffles per wave are the `seen` anti-join and the child dedup,
+hash-partitioned on url_hash / child url; `fetch` is hash-partitioned on
+the rank so one hot host cannot pin a task.
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sher_look_spark.crawler import synth
-from sher_look_spark.crawler.simulator import child_limit
 from sher_look_spark.crawler.storage import SnapshotStore
 from sher_look_spark.functions.hashing import (
     sha256_b64url,
@@ -74,68 +76,34 @@ FETCH_SCHEMA = T.StructType(
 )
 
 
+# Fetch tasks are sized by DATA VOLUME (rows per task), not core count —
+# the same rule file-scan splits follow (maxPartitionBytes): a payload
+# fetch's cost is per-row, so fixed-size tasks keep the stage's tail short
+# at ANY cluster size, where a cores-multiple partitioning leaves the
+# biggest tasks ~3x the smallest (128-224 px payload spread) and the stage
+# idles on the tail. Isolated-stage probes measured 505->672 rows/s at 32
+# cores going from 3x-cores to 100-row tasks; full-crawl runs are
+# VM-noise-dominated between 100 and 1000, so 400 balances tail smoothing
+# against per-task and per-file overhead on the write stages downstream of
+# the persisted fetch.
+FETCH_ROWS_PER_TASK = 400
+FETCH_CHUNK = 512  # rows per pandas frame the fetch mapper yields
+
+
 @dataclass
 class CrawlConfig:
     max_pages: int = 50_000          # application.properties:10
     max_depth: int = 3               # application.properties:12
     queue_cap: int = 50_000          # PersistentQueue.java:22
-    per_host_wave_cap: int | None = None  # politeness budget; None = fidelity mode
     # Time-based politeness (reference: 1 s sleep per fetch per thread,
     # CrawlTask.java:182). A wave models a `wave_budget_s`-second quantum;
     # each host serves at most floor(wave_budget_s / crawl_delay_s) fetches
     # per wave at scheduled_slot = host_slot * crawl_delay_s (SURVEY C7).
     # Overflow candidates are DEFERRED to the next wave, never dropped.
+    # None = fidelity mode (no politeness budget).
     crawl_delay_s: float | None = None
     wave_budget_s: float = 60.0
-    fetch_partitions: int | None = None   # explicit override for the fetch stage
-    # Fetch tasks are sized by DATA VOLUME (rows per task), not core count —
-    # the same rule file-scan splits follow (maxPartitionBytes): a payload
-    # fetch's cost is per-row, so fixed-size tasks keep the stage's tail
-    # short at ANY cluster size, where a cores-multiple partitioning leaves
-    # the biggest tasks ~3x the smallest (128-224 px payload spread) and the
-    # stage idles on the tail. Isolated-stage probes measured 505->672
-    # rows/s at 32 cores going from 3x-cores to 100-row tasks; full-crawl
-    # runs are VM-noise-dominated between 100 and 1000, so 400 balances
-    # tail smoothing against per-task and per-file overhead on the write
-    # stages downstream of the persisted fetch.
-    fetch_rows_per_task: int = 400
     store_html: bool = True               # keep page HTML (enables the index tier)
-    # Salted-partition bloom front for the URL-seen check (functions/bloom.py).
-    # With the bloom on, the `seen` table is scanned but NEVER shuffled: the
-    # bloom answers "definitely new" for most candidates; the few "maybe seen"
-    # do an exact broadcast semi-join. Exactness is unconditional (bloom is a
-    # pre-filter; false positives go to the exact check).
-    use_bloom: bool = True
-    bloom_salts: int = 32            # one bitmap per salt; scale knob (4096 at 10^10)
-    bloom_bits: int = 1 << 20        # INITIAL bits/salt (~2.8M urls total at ~1% fp);
-    #                                  auto-resized (state-owned) as seen grows
-    # The exact check for bloom "maybe seen" rows broadcasts the suspect set
-    # only while the WAVE itself is broadcast-scale (suspects <= wave size);
-    # above this, most children of a deep wave being already-seen would make
-    # the broadcast multi-GB, so the engine falls back to the shuffle
-    # anti-join (co-located on a bucketed seen table under Iceberg).
-    suspect_broadcast_max: int = 4_000_000
-    # Activation threshold: below this many seen URLs a plain anti-join beats
-    # the bloom's fixed per-wave cost (bitmap load + merge + extra jobs), so
-    # the filter engages only once `seen` outgrows broadcast scale. Crossing
-    # the threshold triggers the automatic one-time full rebuild.
-    bloom_min_seen: int = 2_000_000
-    # Above this many wave candidates, per-host politeness slots switch from
-    # a plain Window.partitionBy(host) row_number (one reducer task pins on a
-    # hot host) to the distributed two-pass assignment (_host_slots_skewfree:
-    # range-partition on (host, rank) so a hot host SPANS tasks, then
-    # per-host cross-partition offsets from the tiny (partition, host) count
-    # table). Identical slot numbers either way; the threshold only trades
-    # the extra exchange against the single-reducer risk.
-    politeness_window_max: int = 1_000_000
-    # Child discovery ranks: up to this many wave CANDIDATES, the per-parent
-    # offset table (<= one row per committed parent) is prefix-summed with a
-    # single-partition window — the whole child-rank assignment then stays
-    # LAZY (zero driver actions; it materializes inside the concurrent write
-    # pool). Above it, the distributed two-pass machinery
-    # (_parent_offset_ranks: range partition + per-range sums + one tiny
-    # collect) takes over — a 10^8-parent offset table must not hit one task.
-    rank_window_max: int = 1_000_000
     web: synth.SynthWebConfig = field(default_factory=synth.SynthWebConfig)
 
 
@@ -192,12 +160,10 @@ def _make_fetch_mapper(web: synth.SynthWebConfig):
     is where HTTP + image decode happens, batched per partition.
     """
 
-    CHUNK = int(os.environ.get("SPARK_GRAFT_FETCH_CHUNK", "512"))  # output pandas frame rows
-
     def mapper(batches):
         for big in batches:
-            for start in range(0, len(big), CHUNK):
-                pdf = big.iloc[start : start + CHUNK]
+            for start in range(0, len(big), FETCH_CHUNK):
+                pdf = big.iloc[start : start + FETCH_CHUNK]
                 out = {k: [] for k in FETCH_SCHEMA.fieldNames()}
                 for url, depth, rank in zip(pdf["url"], pdf["depth"], pdf["rank"]):
                     r = synth.fetch(web, url)
@@ -260,57 +226,6 @@ def _dense_rank_sorted(df: DataFrame, sort_cols: list, out_col: str, offset: int
     return out, sdf, base - offset  # (ranked df, persist handle, total rows)
 
 
-def _parent_offset_ranks(
-    accepted: DataFrame, next_rank: int
-) -> tuple[DataFrame, DataFrame, int]:
-    """Dense child discovery ranks in (parent_rank, link_pos) order, built
-    from per-parent offsets instead of a global range-repartition: the
-    per-parent row_number co-partitions with the links top-K window (same
-    parent_rank key — one exchange serves both), and the offset table is the
-    per-parent COUNTS (tiny vs the children), prefix-summed with the same
-    two-pass trick (per-range sums + driver-combined bases). Avoids the
-    RangePartitioner's sampling pass over the full child set.
-
-    Returns (ranked_children, persist_handle, total)."""
-    from pyspark.sql import Window
-
-    spark = accepted.sparkSession
-    counts = accepted.groupBy("parent_rank").agg(F.count(F.lit(1)).alias("_n"))
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    sdf = (
-        counts.repartitionByRange(nparts, "parent_rank")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    psums = {
-        r._pid: r.s
-        for r in sdf.groupBy("_pid").agg(F.sum("_n").alias("s")).collect()
-    }
-    base = next_rank
-    bases = {}
-    for pid in sorted(psums):
-        bases[pid] = base
-        base += psums[pid]
-    base_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(b)) for p, b in bases.items()], "_pid int, _base long"
-        )
-    )
-    w_cnt = Window.partitionBy("_pid").orderBy("parent_rank").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        sdf.join(base_df, "_pid")
-        .withColumn("_off", F.col("_base") + F.coalesce(F.sum("_n").over(w_cnt), F.lit(0)))
-        .select("parent_rank", "_off")
-    )
-    w_child = Window.partitionBy("parent_rank").orderBy("link_pos")
-    ranked = accepted.join(offsets, "parent_rank").withColumn(
-        "rank", F.col("_off") + F.row_number().over(w_child) - 1
-    )
-    return ranked, sdf, base - next_rank
-
-
 def _running_prefix_min(df: DataFrame, sort_cols: list, val_col: str) -> tuple:
     """Global running min of `val_col` in `sort_cols` order, scale-safe (the
     same two-pass shape as _dense_rank_sorted): range-repartition on the sort
@@ -364,7 +279,6 @@ class CrawlEngine:
         self._norm = _normalize_udf()
         self._canon = _canonicalize_href_udf()
         _warm_write_path(spark)
-        self._wave_handles: list[DataFrame] = []
 
     # ------------------------------------------------------------------ setup
     def seed(self, seeds: list[str]) -> None:
@@ -383,201 +297,6 @@ class CrawlEngine:
                 "pending_depths": {"0": len(seeds)},
             },
         )
-
-    # ---------------------------------------------------- URL-seen + bloom (C4)
-    def _load_bloom_df(self, state: dict) -> tuple[DataFrame | None, int]:
-        """(seen_bloom DataFrame, effective bits-per-salt) from the latest
-        snapshot. The DataFrame is None when the bloom is disabled / absent /
-        built with a different salt count (a None forces the plain anti-join
-        this wave and a full rebuild at commit, so resume from pre-bloom
-        snapshots stays exact). The bitmaps are NEVER collected to the
-        driver: per-salt probing and merging happen where the data lives.
-
-        Bits-per-salt is owned by snapshot state (``bloom.bits``), not config:
-        auto-resize grows it as the crawl's seen set outgrows the sized
-        capacity, and the filter must keep probing at the size it was built
-        with."""
-        eff_bits = self.cfg.bloom_bits
-        if not self.cfg.use_bloom:
-            return None, eff_bits
-        meta = state.get("bloom")
-        if not meta or meta.get("salts") != self.cfg.bloom_salts:
-            return None, eff_bits
-        eff_bits = int(meta.get("bits", eff_bits))
-        return self.store.read(self.spark, "seen_bloom"), eff_bits
-
-    def _seen_filter(
-        self, winners: DataFrame, seen: DataFrame | None,
-        bloom_df: DataFrame | None, n_wave: int,
-    ) -> DataFrame:
-        """Drop already-seen URLs without ever shuffling the seen table.
-
-        Bloom path: candidates cogroup with the `seen_bloom` table on
-        ``salt = pmod(url_hash, n_salts)`` — each task loads ONLY its salt's
-        bitmap (at 10^10 URLs the aggregate filter is ~TiB; a driver
-        collect+broadcast of it cannot exist). "Definitely new" rows (no
-        false negatives) skip the exact check entirely. The "maybe seen"
-        rows (true dups + ~fp_rate) verify exactly:
-
-        * when the wave is broadcast-scale (suspects <= wave <=
-          ``suspect_broadcast_max``): seen ⋉ broadcast(suspects) then an
-          anti-join against the (small) hit set — seen is only SCANNED;
-        * otherwise (deep-crawl waves where most children are already seen):
-          plain shuffle anti-join — on a real cluster the seen table is
-          bucketed by url_hash (Iceberg), so this co-locates without
-          re-shuffling seen; the broadcast path must not be used because
-          suspects can approach wave size.
-
-        Reference analog: the in-memory cheap-check before the DB lookup
-        (CrawlTask.java:82-93)."""
-        if seen is None:
-            return winners
-        if bloom_df is None:
-            return winners.join(seen.select("url_hash"), "url_hash", "left_anti")
-        n_salts = self.cfg.bloom_salts
-        cands = winners.withColumn(
-            "salt", F.pmod("url_hash", F.lit(n_salts)).cast("int")
-        )
-        out_schema = T.StructType(cands.schema.fields + [T.StructField("_maybe", T.BooleanType())])
-
-        def probe(_key, cpdf, bpdf):
-            import numpy as np
-
-            from sher_look_spark.functions import bloom as B
-
-            if len(bpdf) == 0:
-                flags = np.zeros(len(cpdf), dtype=bool)  # no bitmap -> salt has no seen rows
-            else:
-                bm = np.frombuffer(bytes(bpdf["bitmap"].iloc[0]), dtype=np.uint8)
-                flags = B.might_contain(
-                    bm, cpdf["url_hash"].to_numpy("int64").astype("uint64")
-                )
-            return cpdf.assign(_maybe=flags)
-
-        # persisted for the wave: both the fresh and the suspects branch read
-        # `flagged`, and without the cache the cogroup shuffle (plus its
-        # upstream canonicalize UDF and first-rank-wins window) would execute
-        # once per branch per downstream action. Unpersisted in run_wave's
-        # cleanup via _wave_handles.
-        flagged = (
-            cands.groupBy("salt")
-            .cogroup(bloom_df.groupBy("salt"))
-            .applyInPandas(probe, out_schema)
-            .persist()
-        )
-        self._wave_handles.append(flagged)
-        suspects = flagged.filter(F.col("_maybe"))
-        fresh = flagged.filter(~F.col("_maybe"))
-        if n_wave <= self.cfg.suspect_broadcast_max:
-            hits = seen.select("url_hash").join(
-                F.broadcast(suspects.select("url_hash")), "url_hash", "left_semi"
-            )
-            cleared = suspects.join(F.broadcast(hits), "url_hash", "left_anti")
-        else:
-            cleared = suspects.join(seen.select("url_hash"), "url_hash", "left_anti")
-        return fresh.unionByName(cleared).drop("_maybe", "salt")
-
-    def _host_slots_skewfree(self, winners: DataFrame) -> DataFrame:
-        """Per-host politeness slot numbers WITHOUT a per-host single-reducer
-        window: at 10^8-row waves `Window.partitionBy(host)` pins a hot
-        host's entire candidate set on one task. Same two-pass shape as
-        `_parent_offset_ranks`, fully distributed (no driver collect):
-
-        1. range-repartition on (host, rank) — a hot host SPANS consecutive
-           partitions, each bounded by partition size;
-        2. local row_number per (partition, host);
-        3. per-host cross-partition offsets from the (partition, host) count
-           table — one row per (partition, host), so the offset window
-           touches <= nparts rows per host, never the candidates themselves.
-
-        Slot numbers are identical to the plain window's (host_slot = 1-based
-        position within host in rank order)."""
-        nparts = max(self.spark.sparkContext.defaultParallelism, 2)
-        # Eager lineage cut first: the two-pass machinery references its
-        # input TWICE (counts + final join), and the wave plan above it —
-        # canonicalize, first-rank-wins, bloom cogroup — is deep; without
-        # the cut the downstream plan TREE doubles here and Spark's plan
-        # stringification alone can OOM the driver on a long politeness
-        # crawl. One extra pass over winners, amortized by the >1M-row
-        # waves that select this path.
-        sdf = (
-            winners.repartitionByRange(nparts, "host", "rank")
-            .withColumn("_pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
-        )
-        counts = sdf.groupBy("_pid", "host").agg(F.count(F.lit(1)).alias("_n"))
-        w_off = (
-            Window.partitionBy("host")
-            .orderBy("_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = counts.withColumn(
-            "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-        ).drop("_n")
-        w_local = Window.partitionBy("_pid", "host").orderBy("rank")
-        return (
-            sdf.join(offsets, ["_pid", "host"])
-            .withColumn(
-                "host_slot",
-                (F.col("_off") + F.row_number().over(w_local)).cast("int"),
-            )
-            .drop("_pid", "_off")
-        )
-
-    def _wave_bitmaps(self, hashes_df: DataFrame, n_bits: int) -> DataFrame:
-        """(salt, bitmap) bitmaps for a batch of url hashes — built where the
-        hashes live via grouped applyInPandas (numpy bit-sets over Arrow
-        batches); never collected."""
-        n_salts = self.cfg.bloom_salts
-
-        def build(key, pdf):
-            from sher_look_spark.functions import bloom as B
-
-            bm = B.empty_bitmap(n_bits)
-            B.add_hashes(bm, pdf["url_hash"].to_numpy("int64").astype("uint64"))
-            return pd.DataFrame({"salt": [int(key[0])], "bitmap": [bm.tobytes()]})
-
-        return (
-            hashes_df.select(
-                "url_hash", F.pmod("url_hash", F.lit(n_salts)).cast("int").alias("salt")
-            )
-            .groupBy("salt")
-            .applyInPandas(build, "salt int, bitmap binary")
-        )
-
-    def _stage_bloom(
-        self, bloom_df: DataFrame | None, seen: DataFrame | None,
-        seen_add: DataFrame, wave: int, n_bits: int,
-    ) -> str:
-        """Merge the wave's seen additions into the salt bitmaps and stage the
-        REPLACEMENT seen_bloom table (n_salts rows — the parquet stand-in for
-        an Iceberg rewrite of a small metadata table). Fully distributed:
-        wave bitmaps union the previous bitmaps and OR-merge per salt in a
-        grouped applyInPandas — one task per salt, each touching only its own
-        bitmap; the driver never holds bitmap bytes."""
-        if bloom_df is None and seen is not None:
-            # resume from a pre-bloom snapshot, or a capacity resize: one-time
-            # full rebuild over the entire seen table at the (new) bit width
-            base_df = seen.select("url_hash").unionByName(seen_add.select("url_hash"))
-        else:
-            base_df = seen_add.select("url_hash")
-        merged = self._wave_bitmaps(base_df, n_bits)
-        if bloom_df is not None:
-            def or_merge(key, pdf):
-                import numpy as np
-
-                out = None
-                for b in pdf["bitmap"]:
-                    a = np.frombuffer(bytes(b), dtype=np.uint8)
-                    out = a.copy() if out is None else np.bitwise_or(out, a)
-                return pd.DataFrame({"salt": [int(key[0])], "bitmap": [out.tobytes()]})
-
-            merged = (
-                merged.unionByName(bloom_df)
-                .groupBy("salt")
-                .applyInPandas(or_merge, "salt int, bitmap binary")
-            )
-        return self.store.stage_write(merged, "seen_bloom", wave)
 
     # ------------------------------------------------------------- robots (C5)
     def _resolve_robots(self, cand: DataFrame) -> DataFrame:
@@ -620,9 +339,6 @@ class CrawlEngine:
         t0 = time.time()
         _tprev = [t0]
         phase_secs: dict[str, float] = {}
-        # wave-scoped persist handles created inside helpers (_seen_filter's
-        # flagged cache); unpersisted in the cleanup block below
-        self._wave_handles: list[DataFrame] = []
 
         def _mark(name: str) -> None:
             now = time.time()
@@ -716,45 +432,31 @@ class CrawlEngine:
             .withColumn("path", F.coalesce(F.parse_url("norm", F.lit("PATH")), F.lit("")))
         ).persist()
 
-        # --- C4: within-wave first-rank-wins + URL-seen check (bloom-fronted)
+        # --- C4: within-wave first-rank-wins + exact URL-seen anti-join (the
+        # reference's in-memory seen check, CrawlTask.java:82-93)
         w_url = Window.partitionBy("url_hash").orderBy("rank")
         winners = cand.withColumn("rn", F.row_number().over(w_url)).filter(F.col("rn") == 1).drop("rn")
         seen = self.store.read(self.spark, "seen")
-        bloom_on = (
-            self.cfg.use_bloom
-            and state.get("seen_rows_ub", 0) >= self.cfg.bloom_min_seen
-        )
-        bloom_df, bloom_bits = (
-            self._load_bloom_df(state) if bloom_on else (None, self.cfg.bloom_bits)
-        )
-        winners = self._seen_filter(winners, seen, bloom_df, n_wave)
+        if seen is not None:
+            winners = winners.join(seen.select("url_hash"), "url_hash", "left_anti")
 
         # --- C7: optional per-host politeness budget (deferred, not dropped).
-        # A direct cap (per_host_wave_cap) or a crawl-delay time budget — the
-        # time budget converts to slots/wave and stamps each fetch's
-        # scheduled_slot offset within the wave quantum.
+        # The crawl-delay time budget converts to slots/wave and stamps each
+        # fetch's scheduled_slot offset within the wave quantum.
         deferred = None
         slots = None
-        host_cap = self.cfg.per_host_wave_cap
-        if host_cap is None and self.cfg.crawl_delay_s is not None:
+        if self.cfg.crawl_delay_s is not None:
             host_cap = max(1, int(self.cfg.wave_budget_s / self.cfg.crawl_delay_s))
-        if host_cap is not None:
-            if n_wave > self.cfg.politeness_window_max:
-                winners = self._host_slots_skewfree(winners)
-            else:
-                w_host = Window.partitionBy("host").orderBy("rank")
-                winners = winners.withColumn(
-                    "host_slot", F.row_number().over(w_host)
-                )
+            w_host = Window.partitionBy("host").orderBy("rank")
+            winners = winners.withColumn("host_slot", F.row_number().over(w_host))
             deferred = winners.filter(F.col("host_slot") > host_cap)
             winners = winners.filter(F.col("host_slot") <= host_cap)
-            if self.cfg.crawl_delay_s is not None:
-                slots = winners.select(
-                    "rank",
-                    ((F.col("host_slot") - 1) * float(self.cfg.crawl_delay_s)).alias(
-                        "scheduled_slot"
-                    ),
-                )
+            slots = winners.select(
+                "rank",
+                ((F.col("host_slot") - 1) * float(self.cfg.crawl_delay_s)).alias(
+                    "scheduled_slot"
+                ),
+            )
             winners = winners.drop("host_slot")
 
         # --- C5/C6: robots rules join + allow filter. Only the WAVE's hosts'
@@ -777,10 +479,10 @@ class CrawlEngine:
         # hash buckets — leaves ~1/e of the fetch partitions EMPTY by
         # birthday collision (measured: 4-5 busy of 8 at local[8]), i.e.
         # the fetch stage ran on ~2/3 of the cluster. Task count follows
-        # DATA size (fetch_rows_per_task), floored at the cluster width.
-        nparts = self.cfg.fetch_partitions or max(
+        # DATA size (FETCH_ROWS_PER_TASK), floored at the cluster width.
+        nparts = max(
             self.spark.sparkContext.defaultParallelism,
-            -(-n_wave // self.cfg.fetch_rows_per_task),
+            -(-n_wave // FETCH_ROWS_PER_TASK),
         )
         fetch_in = allowed.withColumnRenamed("norm", "url").repartition(
             nparts, F.col("rank")
@@ -844,8 +546,8 @@ class CrawlEngine:
 
         # --- C10/C11: children of committed parents
         next_rank = state["next_rank"]
-        accepted = None
         links_df = None
+        windowed = None
         if min_depth < self.cfg.max_depth and (n_committed is None or n_committed > 0):
             exploded = committed.select(
                 F.col("url").alias("parent_url"),
@@ -896,13 +598,6 @@ class CrawlEngine:
                     .filter(F.col("crn") == 1)
                     .drop("crn")
                 )
-            if n_wave > self.cfg.rank_window_max:
-                # big-wave path only: _parent_offset_ranks below references
-                # `accepted` directly (counts + ranked join). On the lazy
-                # small-wave path the SINGLE consumer is `windowed` (cached
-                # itself), so a second cache of the same children would only
-                # double the wave's memory churn.
-                accepted = accepted.persist()
 
             # links top-K, child discovery ranks and the per-parent counts
             # all key on parent_rank — ONE hash exchange of the children
@@ -920,19 +615,16 @@ class CrawlEngine:
                 F.length("child"), "link_pos"
             )
             w_crank = Window.partitionBy("parent_rank").orderBy("link_pos")
+            # Persisted: three consumers (links write, pending write, the
+            # accepted count) hit `windowed` CONCURRENTLY in the write pool
+            # below — without the cache each would recompute the exchange +
+            # both sorts (and on an AQE-coalesced tiny wave, serially on 1
+            # task)
             windowed = (
                 accepted.withColumn("k", limit_expr)
                 .withColumn("lrn", F.row_number().over(w_parent))
                 .withColumn("_crk", F.row_number().over(w_crank))
-            )
-            if n_wave <= self.cfg.rank_window_max:
-                # lazy small-wave path: three consumers (links write, pending
-                # write, the accepted count) hit `windowed` CONCURRENTLY in
-                # the write pool below — without the cache each would
-                # recompute the exchange + both sorts (and on an
-                # AQE-coalesced tiny wave, serially on 1 task)
-                windowed = windowed.persist()
-                self._wave_handles.append(windowed)
+            ).persist()
             # links write happens in the concurrent write pool below — only
             # the DataFrame is built here
             links_df = (
@@ -946,51 +638,32 @@ class CrawlEngine:
             )
             _mark("children_links")
 
-            if n_wave <= self.cfg.rank_window_max:
-                # Lazy child ranks: the per-parent offset table (<= one row
-                # per committed parent) prefix-sums in a single-partition
-                # window, so NO driver action runs here — the sampling job +
-                # two collects of the two-pass path disappear from the wave's
-                # serial critical path and the whole child-rank plan
-                # materializes inside the concurrent write pool below.
-                # n_accepted is resolved there too (accepted.count from
-                # cache).
-                counts = windowed.groupBy("parent_rank").agg(
-                    F.count(F.lit(1)).alias("_n")
+            # Child ranks: the per-parent offset table (<= one row per
+            # committed parent) prefix-sums in a single-partition window, so
+            # NO driver action runs here — the whole child-rank plan
+            # materializes inside the concurrent write pool below, and the
+            # accepted count is resolved there too (from the cache).
+            counts = windowed.groupBy("parent_rank").agg(
+                F.count(F.lit(1)).alias("_n")
+            )
+            w_off = Window.orderBy("parent_rank").rowsBetween(
+                Window.unboundedPreceding, -1
+            )
+            offsets = counts.withColumn(
+                "_off",
+                F.lit(next_rank) + F.coalesce(F.sum("_n").over(w_off), F.lit(0)),
+            ).select("parent_rank", "_off")
+            new_pending = (
+                windowed.join(offsets, "parent_rank")
+                .select(
+                    F.col("child").alias("url"),
+                    (F.col("parent_depth") + 1).alias("depth"),
+                    (F.col("_off") + F.col("_crk") - 1).alias("rank"),
                 )
-                w_off = Window.orderBy("parent_rank").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-                offsets = counts.withColumn(
-                    "_off",
-                    F.lit(next_rank) + F.coalesce(F.sum("_n").over(w_off), F.lit(0)),
-                ).select("parent_rank", "_off")
-                new_pending = (
-                    windowed.join(offsets, "parent_rank")
-                    .select(
-                        F.col("child").alias("url"),
-                        (F.col("parent_depth") + 1).alias("depth"),
-                        (F.col("_off") + F.col("_crk") - 1).alias("rank"),
-                    )
-                )
-                _rank_tmp = None
-                n_accepted = None  # resolved in the write pool
-            else:
-                ranked_children, _rank_tmp, n_accepted = _parent_offset_ranks(
-                    accepted.select(
-                        F.col("child").alias("url"),
-                        (F.col("parent_depth") + 1).alias("depth"),
-                        F.col("parent_rank"),
-                        F.col("link_pos"),
-                    ),
-                    next_rank,
-                )
-                new_pending = ranked_children.select("url", "depth", "rank")
+            )
             _mark("child_rank")
         else:
             new_pending = self.spark.createDataFrame([], PENDING_SCHEMA)
-            _rank_tmp = None
-            n_accepted = 0
 
         # --- visited set additions: everything polled before the stop.
         # Politeness-DEFERRED candidates were never polled (they stay queued),
@@ -1002,18 +675,13 @@ class CrawlEngine:
         seen_add = polled.select("url_hash", F.col("norm").alias("url")).distinct()
         if seen is not None:
             seen_add = seen_add.join(seen.select("url_hash"), "url_hash", "left_anti")
-        if bloom_on:
-            # consumed by both the seen write and the bloom build
-            seen_add = seen_add.persist()
 
         # --- leftover pending (unpolled due to budget stop) + politeness
         # deferrals; depth histogram maintained incrementally so the next wave
-        # needs no counting job (slow-path counts only on the rare stop/defer)
+        # needs no counting job (slow-path counts only on the rare stop/defer).
+        # The accepted children's histogram and next_rank contributions are
+        # applied after the write pool resolves their count.
         next_depths: dict[int, int] = {d: n for d, n in depth_counts.items() if d != min_depth}
-        # n_accepted is None on the lazy child-rank path — its histogram and
-        # next_rank contributions are applied after the write pool resolves it
-        if n_accepted:
-            next_depths[min_depth + 1] = next_depths.get(min_depth + 1, 0) + n_accepted
         leftovers = []
         if pre_trimmed is not None:
             leftovers.append(pre_trimmed)
@@ -1063,79 +731,43 @@ class CrawlEngine:
         # sum of the smaller writes' wall times.
         from concurrent.futures import ThreadPoolExecutor
 
-        # cluster by salt BEFORE the hive-partitioned write: otherwise every
-        # shuffle partition emits a file into every salt dir (tasks x salts
-        # small files per wave — file-count grows with core count and the
-        # seen scan collapses under listing overhead)
-        seen_salted = seen_add.withColumn(
-            "salt", F.pmod("url_hash", F.lit(self.cfg.bloom_salts)).cast("int")
-        ).repartition(F.col("salt"))
-        write_jobs: dict[str, tuple] = {
-            "images": (images_df, "images", wave, None),
-            # seen is hive-partitioned by salt — the parquet stand-in for
-            # Iceberg bucketing, so scans prune to touched salt partitions
-            "seen": (seen_salted, "seen", wave, ["salt"]),
-            "seen_hashes": (committed_slim.select("content_hash"), "seen_hashes", wave, None),
-            "pending": (pending_next, "pending", wave + 1, None),
-            "robots": (robots_new, "robots", wave, None),
+        write_jobs: dict[str, tuple[DataFrame, int]] = {
+            "images": (images_df, wave),
+            "seen": (seen_add, wave),
+            "seen_hashes": (committed_slim.select("content_hash"), wave),
+            "pending": (pending_next, wave + 1),
+            "robots": (robots_new, wave),
         }
         if self.cfg.store_html:
             write_jobs["pages"] = (
                 committed.select("url", "depth", "rank", "html", F.lit(wave).alias("wave")),
-                "pages",
                 wave,
-                None,
             )
         if links_df is not None:
-            write_jobs["links"] = (links_df, "links", wave, None)
-        # Bloom capacity auto-resize: once the seen upper bound outgrows the
-        # sized capacity (~12 bits/key for ~1% fp) the fp rate decays and
-        # every extra fp pays an exact check — grow the per-salt bit width
-        # (2x headroom) and rebuild from the full seen table this commit.
-        seen_ub_new = state.get("seen_rows_ub", 0) + int(n_wave)
-        if bloom_on:
-            if seen_ub_new > (self.cfg.bloom_salts * bloom_bits) // 12:
-                while (self.cfg.bloom_salts * bloom_bits) // 12 < 2 * seen_ub_new:
-                    bloom_bits *= 2
-                bloom_df = None  # forces the full rebuild path in _stage_bloom
-        with ThreadPoolExecutor(max_workers=len(write_jobs) + 3) as pool:
+            write_jobs["links"] = (links_df, wave)
+        n_accepted = 0
+        with ThreadPoolExecutor(max_workers=len(write_jobs) + 2) as pool:
             futures = {
-                name: pool.submit(self.store.stage_write, df, table, w, pb)
-                for name, (df, table, w, pb) in write_jobs.items()
+                name: pool.submit(self.store.stage_write, df, name, w)
+                for name, (df, w) in write_jobs.items()
             }
-            bloom_fut = (
-                pool.submit(self._stage_bloom, bloom_df, seen, seen_add, wave, bloom_bits)
-                if bloom_on
-                else None
-            )
             stats_fut = pool.submit(_cstats_agg) if stats_deferred else None
-            # lazy child-rank path: the accepted-children count rides the
-            # pool too (reads the `windowed` cache the links/pending write
-            # jobs materialize) instead of standing as its own serial job
-            acc_fut = pool.submit(windowed.count) if n_accepted is None else None
+            # the accepted-children count rides the pool too (reads the
+            # `windowed` cache the links/pending write jobs materialize)
+            # instead of standing as its own serial job
+            acc_fut = pool.submit(windowed.count) if windowed is not None else None
             rels = {name: fut.result() for name, fut in futures.items()}
-            bloom_rel = bloom_fut.result() if bloom_fut is not None else None
             if stats_fut is not None:
-                cstats = stats_fut.result()
-                n_committed = cstats.n
+                n_committed = stats_fut.result().n
             if acc_fut is not None:
                 n_accepted = acc_fut.result()
-                if n_accepted:
-                    next_depths[min_depth + 1] = (
-                        next_depths.get(min_depth + 1, 0) + n_accepted
-                    )
+        if n_accepted:
+            next_depths[min_depth + 1] = next_depths.get(min_depth + 1, 0) + n_accepted
         next_rank += n_accepted
         _mark("table_writes")
         appends: dict[str, list[str]] = {
-            "images": [rels["images"]],
-            "seen": [rels["seen"]],
-            "seen_hashes": [rels["seen_hashes"]],
-            "robots": [rels["robots"]],
+            name: [rels[name]] for name in write_jobs if name != "pending"
         }
-        if self.cfg.store_html:
-            appends["pages"] = [rels["pages"]]
-        if links_df is not None:
-            appends["links"] = [rels["links"]]
         # per-wave lineage + metrics live in the snapshot manifest itself (one
         # snapshot per wave = the full history) — a table write per wave would
         # only add a serial job to every wave
@@ -1149,9 +781,6 @@ class CrawlEngine:
             "phases": str(phase_secs),
         }
 
-        replaces = {"pending": [rels["pending"]]}
-        if bloom_rel is not None:
-            replaces["seen_bloom"] = [bloom_rel]
         # depths whose pending ranks are no longer dense (deferral scatters);
         # cleared automatically once the depth drains
         live_depths = {d for d, v in next_depths.items() if v > 0}
@@ -1162,31 +791,17 @@ class CrawlEngine:
             "next_rank": int(next_rank),
             "stopped_by_budget": stop_rank is not None,
             "pending_depths": {str(d): int(n) for d, n in next_depths.items() if n > 0},
-            # upper bound on |seen| (distinct polled <= polled): drives the
-            # bloom activation threshold without a counting job
-            "seen_rows_ub": seen_ub_new,
             # observed commit rate of this wave -> next wave's pre-trim margin
             "commit_rate": (float(n_committed) / n_wave) if n_wave else None,
             "scattered_depths": sorted(scattered_next & live_depths),
+            "metrics": metrics_row,
         }
-        if bloom_rel is not None:
-            new_state["bloom"] = {"salts": self.cfg.bloom_salts, "bits": int(bloom_bits)}
-        new_state["metrics"] = metrics_row
-        self.store.commit(appends=appends, replaces=replaces, state=new_state)
-        if bloom_on:
-            seen_add.unpersist()
-        pending.unpersist()
-        cand.unpersist()
-        fetched.unpersist()
-        committed_slim.unpersist()
-        robots_cached.unpersist()
-        if accepted is not None:
-            accepted.unpersist()
-        if _rank_tmp is not None:
-            _rank_tmp.unpersist()
-        for h in self._wave_handles:
-            h.unpersist()
-        self._wave_handles = []
+        self.store.commit(
+            appends=appends, replaces={"pending": [rels["pending"]]}, state=new_state
+        )
+        for h in (pending, cand, fetched, committed_slim, robots_cached, windowed):
+            if h is not None:
+                h.unpersist()
         return {"done": False, **metrics_row, **new_state}
 
     def _apply_queue_cap_exact(

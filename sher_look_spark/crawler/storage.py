@@ -50,29 +50,15 @@ class SnapshotStore:
             doc = json.load(fh)
         return Snapshot(doc["snapshot_id"], doc["tables"], doc.get("state", {}))
 
-    def stage_write(
-        self, df: DataFrame, table: str, wave: int, partition_by: list[str] | None = None
-    ) -> str:
-        """Write a parquet dir for `table`; invisible until commit().
-
-        ``partition_by``: hive-partition the staged dir (e.g. the `seen`
-        table by ``salt = url_hash mod N`` so scans prune to the partitions a
-        wave actually touches — the parquet stand-in for Iceberg bucketing)."""
+    def stage_write(self, df: DataFrame, table: str, wave: int) -> str:
+        """Write a parquet dir for `table`; invisible until commit()."""
         rel = f"{table}/wave-{wave:05d}-{uuid.uuid4().hex[:8]}"
         target = os.path.join(self.root, rel)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
+        df.write.mode("overwrite").parquet(target)
         # A ZERO-partition frame (AQE collapses empty results) writes no part
         # files, leaving a dir Spark cannot re-read. Re-write such results as
         # one empty schema-bearing file.
-        has_files = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(target)
-            for f in files
-        )
-        if not has_files:
+        if not any(f.endswith(".parquet") for f in os.listdir(target)):
             df.sparkSession.createDataFrame([], df.schema).repartition(1).write.mode(
                 "overwrite"
             ).parquet(target)
@@ -120,16 +106,16 @@ class SnapshotStore:
         if snap is None or not snap.tables.get(table):
             return None
         # One scan per staged dir, unioned by name: multi-path reads of
-        # hive-partitioned dirs conflict, and allowMissingColumns gives
-        # snapshot-level schema evolution (Iceberg semantics) for free.
+        # hive-partitioned dirs (older state dirs' salted `seen`) conflict,
+        # and allowMissingColumns gives snapshot-level schema evolution
+        # (Iceberg semantics) for free.
         out = None
         for rel in snap.tables[table]:
             p = os.path.join(self.root, rel)
             reader = spark.read
             schema = self._staged_schemas.get(rel)
             if schema is not None:
-                # known staged schema: skip footer inference (partition
-                # columns in the schema are still resolved from dir names)
+                # known staged schema: skip footer inference
                 reader = reader.schema(schema)
             df = reader.parquet(p)
             out = df if out is None else out.unionByName(df, allowMissingColumns=True)

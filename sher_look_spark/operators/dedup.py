@@ -2,9 +2,12 @@
 
 Beyond the reference's exact content-hash dedup (CrawlTask.java:116-128),
 the engine ships the near-dup family a web-scale corpus needs: MinHash+LSH,
-SimHash, and n-gram Jaccard. All hot paths are JVM-side array expressions
-(higher-order functions over token/shingle arrays — whole-stage codegen);
-only SimHash bit-counting drops to one Arrow-batched numpy UDF.
+SimHash, and n-gram Jaccard. LSH banding, the pair verifies and the
+n-gram Jaccard shingles are JVM-side array expressions (higher-order
+functions over arrays — whole-stage codegen). Two steps run in Python over
+Arrow batches: MinHash signatures (one `mapInArrow` stage that tokenizes,
+shingles and hashes each document) and SimHash bit-counting (one numpy
+pandas UDF).
 
 Scale notes: LSH turns the O(n²) all-pairs problem into a band-bucket
 shuffle (groupBy band_hash) + within-bucket verify; bucket skew is handled

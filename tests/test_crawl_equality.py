@@ -119,79 +119,58 @@ def test_max_pages_budget_cuts_in_fifo_order(spark, tmp_path, sim):
     assert seen == sim_budget.visited
 
 
-def test_bloom_seen_filter_is_exact(spark, tmp_path, sim):
-    """C4 with the salted bloom front FORCED ON from wave 0
-    (bloom_min_seen=0): the bloom is a pre-filter over the exact check, so
-    crawl order and seen set must be bit-identical to the reference."""
-    eng = CrawlEngine(
-        spark,
-        str(tmp_path / "bloom"),
-        CrawlConfig(max_pages=10_000, max_depth=3, web=WEB, bloom_min_seen=0),
+def _rewrite_seen_salted(spark, store, n_salts=32):
+    """Turn the latest snapshot into the layout older engines wrote: every
+    `seen` dir hive-partitioned by ``salt = pmod(url_hash, n_salts)`` (the
+    column comes back on read), a `seen_bloom` table of per-salt bitmaps, and
+    the `bloom` / `seen_rows_ub` state keys."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    snap = store.latest()
+    seen = store.read(spark, "seen", snap)
+    seen_rel = "seen/wave-00000-salted"
+    (
+        seen.withColumn("salt", F.pmod("url_hash", F.lit(n_salts)).cast("int"))
+        .repartition("salt")
+        .write.partitionBy("salt")
+        .parquet(os.path.join(store.root, seen_rel))
     )
-    eng.run(SEEDS)
-    got = [r.url for r in _committed_in_order(eng)]
-    assert got == [c["url"] for c in sim.committed]
-    seen = {r.url for r in eng.store.read(eng.spark, "seen").collect()}
-    assert seen == sim.visited
-    # the bloom table exists and covers every salt that has seen rows
-    blooms = eng.store.read(eng.spark, "seen_bloom")
-    assert blooms is not None and blooms.count() >= 1
-
-
-def test_bloom_suspect_fallback_is_exact(spark, tmp_path, sim):
-    """The exact check for bloom 'maybe seen' rows must produce identical
-    results through BOTH strategies: suspect_broadcast_max=0 forces the
-    shuffle-anti-join fallback (the deep-wave path where suspects approach
-    wave size and a broadcast would be multi-GB). bloom_salts=5 is
-    deliberately non-power-of-two: probe and build salts must agree on
-    signed-pmod semantics for negative url hashes (a mismatch makes bloom
-    FALSE NEGATIVES -> re-fetched duplicates -> order divergence)."""
-    eng = CrawlEngine(
-        spark,
-        str(tmp_path / "fallback"),
-        CrawlConfig(
-            max_pages=10_000, max_depth=3, web=WEB,
-            bloom_min_seen=0, bloom_salts=5, suspect_broadcast_max=0,
-        ),
+    bloom_rel = "seen_bloom/wave-00000-salted"
+    spark.createDataFrame(
+        [(s, bytes(64)) for s in range(n_salts)], "salt int, bitmap binary"
+    ).write.parquet(os.path.join(store.root, bloom_rel))
+    state = dict(snap.state)
+    state["bloom"] = {"salts": n_salts, "bits": 512}
+    state["seen_rows_ub"] = seen.count()
+    store.commit(
+        replaces={"seen": [seen_rel], "seen_bloom": [bloom_rel]}, state=state
     )
-    eng.run(SEEDS)
-    got = [r.url for r in _committed_in_order(eng)]
-    assert got == [c["url"] for c in sim.committed]
-    seen = {r.url for r in eng.store.read(eng.spark, "seen").collect()}
-    assert seen == sim.visited
-
-
-def test_bloom_auto_resize_preserves_equality(spark, tmp_path, sim):
-    """Crossing the sized capacity mid-crawl (tiny initial bits) must trigger
-    a transparent rebuild at a wider bit width with zero behavior change."""
-    cfg = CrawlConfig(
-        max_pages=10_000, max_depth=3, web=WEB,
-        bloom_min_seen=0, bloom_salts=4, bloom_bits=256,  # capacity ~85 urls
-    )
-    eng = CrawlEngine(spark, str(tmp_path / "resize"), cfg)
-    eng.run(SEEDS)
-    got = [r.url for r in _committed_in_order(eng)]
-    assert got == [c["url"] for c in sim.committed]
-    meta = eng.store.latest().state["bloom"]
-    assert meta["bits"] > 256, "capacity crossing must have widened the filter"
-    assert meta["salts"] == 4
-    # the stored filter really is at the resized width (bits/8 bytes per salt)
-    bm = eng.store.read(spark, "seen_bloom").collect()
-    assert all(len(bytes(r.bitmap)) == meta["bits"] // 8 for r in bm)
 
 
 def test_resume_from_snapshot(spark, tmp_path, sim, engine_result):
-    """C13: kill between waves -> resume -> identical final state."""
-    state_dir = str(tmp_path / "resume")
+    """C13: kill between waves -> resume -> identical final state, both from
+    this engine's own snapshots and from a state dir whose `seen` table is
+    still in the older salt-partitioned layout."""
     cfg = CrawlConfig(max_pages=10_000, max_depth=3, web=WEB)
+    state_dir = str(tmp_path / "resume")
     eng1 = CrawlEngine(spark, state_dir, cfg)
     eng1.seed(SEEDS)
     eng1.run_wave()
     eng1.run_wave()
-    # "crash": drop the engine, rebuild from the snapshot store alone
-    eng2 = CrawlEngine(spark, state_dir, cfg)
-    eng2.run()
-    got = [r.url for r in _committed_in_order(eng2)]
-    assert got == [c["url"] for c in sim.committed]
-    seen = {r.url for r in eng2.store.read(spark, "seen").collect()}
-    assert seen == sim.visited
+    salted_dir = str(tmp_path / "resume-salted")
+    eng1 = CrawlEngine(spark, salted_dir, cfg)
+    eng1.seed(SEEDS)
+    eng1.run_wave()
+    _rewrite_seen_salted(spark, eng1.store)
+    assert "salt" in eng1.store.read(spark, "seen").columns
+    for d in (state_dir, salted_dir):
+        # "crash": drop the engine, rebuild from the snapshot store alone
+        eng2 = CrawlEngine(spark, d, cfg)
+        eng2.run()
+        got = [r.url for r in _committed_in_order(eng2)]
+        assert got == [c["url"] for c in sim.committed], d
+        seen = {r.url for r in eng2.store.read(spark, "seen").collect()}
+        assert seen == sim.visited, d
+        assert "bloom" not in eng2.store.latest().state

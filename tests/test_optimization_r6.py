@@ -176,33 +176,6 @@ def test_embedding_neardup_dim_param_matches_inferred(spark):
     assert a == b and len(a) > 0
 
 
-def test_lazy_child_ranks_equal_two_pass(spark, tmp_path):
-    """The lazy single-window child-rank path (rank_window_max high) and the
-    distributed two-pass path (rank_window_max=0) must produce the identical
-    crawl — same commit order, same discovery ranks."""
-    from sher_look_spark.crawler import synth
-    from sher_look_spark.crawler.engine import CrawlConfig, CrawlEngine
-
-    web = synth.SynthWebConfig(
-        n_hosts=5, pages_per_host=8, seed=4242, timeout_pct=5, dup_every=4, robots_every=3
-    )
-    seeds = synth.seed_urls(web, 4)
-
-    def crawl(tag, rank_window_max):
-        eng = CrawlEngine(
-            spark, str(tmp_path / tag),
-            CrawlConfig(max_pages=10_000, max_depth=2, web=web, store_html=False,
-                        rank_window_max=rank_window_max),
-        )
-        eng.run(seeds)
-        imgs = eng.store.read(spark, "images")
-        return sorted(
-            (r.wave, r.rank, r.url) for r in imgs.select("wave", "rank", "url").collect()
-        )
-
-    assert crawl("lazy", 10**9) == crawl("twopass", 0)
-
-
 def test_jvm_hash_columns_match_python(spark):
     """url_hash64_col / sha256_b64url_col (JVM expressions — no
     ArrowEvalPython stage in the wave plan) are bit-identical to the Python

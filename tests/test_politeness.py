@@ -108,32 +108,3 @@ def test_no_politeness_leaves_slot_null(spark, tmp_path):
     rows = eng.store.read(spark, "images").select("scheduled_slot", "crawl_time").collect()
     assert rows and all(r.scheduled_slot is None for r in rows)
     assert all(r.crawl_time is not None for r in rows)
-
-
-def test_hot_host_politeness_skewfree_path(spark, tmp_path):
-    """VERDICT: at 10^8-row waves Window.partitionBy(host) pins a hot host on
-    one reducer. politeness_window_max=0 forces the distributed two-pass slot
-    assignment (_host_slots_skewfree) on a 70%-one-host web; every committed
-    row, crawl rank and scheduled slot must be identical to the plain-window
-    path — the machinery changes the plan shape, never the numbers."""
-    web = synth.SynthWebConfig(
-        n_hosts=6, pages_per_host=30, seed=77, hot_host_pct=70,
-        timeout_pct=0, dup_every=0, robots_every=0, junk_pct=0,
-    )
-    seeds = synth.seed_urls(web, 6)
-    outs = {}
-    for name, thresh in (("window", 10**9), ("skewfree", 0)):
-        cfg = CrawlConfig(
-            max_pages=10_000, max_depth=3, crawl_delay_s=1.0, wave_budget_s=4.0,
-            politeness_window_max=thresh, web=web,
-        )
-        eng = CrawlEngine(spark, str(tmp_path / name), cfg)
-        eng.run(seeds, max_waves=60)
-        rows = (
-            eng.store.read(spark, "images")
-            .select("url", "rank", "wave", "scheduled_slot")
-            .collect()
-        )
-        outs[name] = sorted((r.url, r.rank, r.wave, r.scheduled_slot) for r in rows)
-    assert len(outs["window"]) > 0
-    assert outs["window"] == outs["skewfree"]

@@ -72,6 +72,50 @@ def test_search_endpoint_end_to_end(spark, tmp_path, monkeypatch):
         server.shutdown()
 
 
+def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
+    """A cached answer must not outlive its snapshot: once more pages are
+    crawled, indexed and page-ranked, the same GET answers what a direct
+    search_pages call answers on the new snapshot."""
+    from serve_http import make_handler
+
+    from sher_look_spark.operators.webindex import search_pages
+
+    web = synth.SynthWebConfig(n_hosts=3, pages_per_host=5, seed=33, timeout_pct=0)
+    state = str(tmp_path / "serve-stale")
+    store = SnapshotStore(state)
+
+    def crawl_and_index(max_pages, seeds=None):
+        CrawlEngine(
+            spark, state, CrawlConfig(max_pages=max_pages, max_depth=1, web=web)
+        ).run(seeds)
+        assert index_incremental(spark, store)["indexed"] > 0
+        store_pagerank(spark, store)
+
+    def direct():
+        rows = search_pages(spark, state, "synthetic page", 1, 5).collect()
+        return [
+            {"url": r.url, "title": r.title, "score": r.final_score, "snippet": r.snippet}
+            for r in rows
+        ]
+
+    crawl_and_index(3, synth.seed_urls(web, 3))
+    server = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(spark, state))
+    port = server.server_address[1]
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    url = f"http://127.0.0.1:{port}/search?query=synthetic+page&page=1&resultsPerPage=5"
+    try:
+        before = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
+        assert before == direct()
+        crawl_and_index(500)
+        want = direct()
+        assert want != before, "the new snapshot must change this key's answer"
+        after = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
+        assert after == want
+    finally:
+        server.shutdown()
+
+
 def test_search_endpoint_empty_state_is_200_empty(spark, tmp_path):
     """No crawl state behind the server: GET /search answers 200 with an
     empty result list (VERDICT: was an AttributeError -> HTTP 500)."""
