@@ -4,21 +4,23 @@
 Reference: web/SearchController.java:41-90 — GET /search with query, page and
 resultsPerPage params returning ranked results with snippets; pagination
 contract per README:77. Stdlib http.server wrapper over the engine's serve
-tier (operators/webindex.search_pages): the SparkSession lives in the server
-process; each request runs the ranking pipeline over the crawl state dir.
+tier.
 
 Run:
   spark-submit --py-files sher_look_spark.zip scripts/serve_http.py \
       --state /data/crawl-state --port 8080
   curl 'localhost:8080/search?query=spark+crawl&page=1&resultsPerPage=10'
 
-This is a serving-demo tier, not the analytics path: a production deployment
-would precompute the index tables once (index_incremental + store_pagerank)
-and keep them cached — done here at startup. The reference's Caffeine result
-cache (SearchController.java:28-33) maps to a plain dict, capped FIFO, keyed
-(snapshot_id, query, page, per_page): a new index_incremental /
-store_pagerank commit changes the latest snapshot id, so answers cached
-against an older snapshot are never served again.
+Requests run no Spark plan. The server holds one immutable resident index
+(operators/resident.py: the latest snapshot's postings, documents_meta,
+page_rank and idf as numpy arrays) and answers from it exactly what
+operators/webindex.search_pages answers. The index is built in make_handler
+and rebuilt, under a lock, when a request sees a new latest snapshot id (a
+new index_incremental / store_pagerank commit), so an answer is never
+staler than the snapshot the request saw. With answers this cheap there is
+no result cache. Only a snapshot with crawl tables but no index tables yet
+goes through Spark (search_pages' on-the-fly indexing path); no state at all
+answers an empty page.
 """
 
 from __future__ import annotations
@@ -27,24 +29,41 @@ import argparse
 import json
 import os
 import sys
+import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CACHE_MAX = 3000  # SearchController.java:28-33 (Caffeine max size)
-
 
 def make_handler(spark, state_dir: str):
-    import threading
-
     from sher_look_spark.crawler.storage import SnapshotStore
+    from sher_look_spark.operators import webindex
+    from sher_look_spark.operators.resident import ResidentIndex
 
     store = SnapshotStore(state_dir)
-    cache: dict[tuple, list[dict]] = {}
-    # ThreadingHTTPServer serves concurrent requests off this one dict —
-    # guard get/put so eviction and insertion cannot race
-    cache_lock = threading.Lock()
+    snap = store.latest()
+    # (snapshot id, its resident index or None); replaced whole, never mutated
+    served = (snap.snapshot_id if snap else None, ResidentIndex.load(state_dir, snap))
+    swap_lock = threading.Lock()
+
+    def answer(query: str, page: int, per_page: int) -> list[dict]:
+        nonlocal served
+        snap = store.latest()
+        if snap is None:
+            return []
+        with swap_lock:
+            if served[0] != snap.snapshot_id:
+                served = (snap.snapshot_id, ResidentIndex.load(state_dir, snap))
+            index = served[1]
+        if index is not None:
+            rows = index.search(query, page, per_page)
+        else:
+            rows = webindex.search_pages(spark, state_dir, query, page, per_page).collect()
+        return [
+            {"url": url, "title": title, "score": score, "snippet": snippet}
+            for url, title, score, snippet in rows
+        ]
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802 (http.server API)
@@ -62,31 +81,8 @@ def make_handler(spark, state_dir: str):
             except ValueError:
                 self.send_error(400, "page and resultsPerPage must be positive integers")
                 return
-            # search_pages may read a snapshot newer than this id, never an
-            # older one, so an entry is never staler than its key
-            snap = store.latest()
-            key = (snap.snapshot_id if snap else None, query, page, per_page)
-            with cache_lock:
-                hit = cache.get(key)
-            if hit is None:
-                from sher_look_spark.operators.webindex import search_pages
-
-                rows = search_pages(spark, state_dir, query, page, per_page).collect()
-                hit = [
-                    {
-                        "url": r.url,
-                        "title": r.title,
-                        "score": r.final_score,
-                        "snippet": r.snippet,
-                    }
-                    for r in rows
-                ]
-                with cache_lock:
-                    if len(cache) >= CACHE_MAX:
-                        cache.pop(next(iter(cache)))
-                    cache[key] = hit
             body = json.dumps(
-                {"query": query, "page": page, "results": hit}
+                {"query": query, "page": page, "results": answer(query, page, per_page)}
             ).encode()
             self.send_response(200)
             self.send_header("Content-Type", "application/json")

@@ -75,7 +75,7 @@ def search(
     )
 
     parsed = query if isinstance(query, ParsedQuery) else parse_query(query)
-    if parsed is None:
+    if parsed is None or (parsed.is_phrase and not parsed.phrases):  # '', '""'
         return spark.createDataFrame([], f"{doc_col} long, final_score double")
 
     if not parsed.is_phrase:
@@ -107,4 +107,7 @@ def search(
         else spark.createDataFrame([], "id long, rank double"),
         doc_col,
     )
-    return paginate(blended, page, per_page).select(doc_col, "final_score")
+    # doc id breaks score ties, so consecutive pages neither repeat nor skip
+    # a doc
+    order = [F.desc("final_score"), F.asc(doc_col)]
+    return paginate(blended, page, per_page, order).select(doc_col, "final_score")

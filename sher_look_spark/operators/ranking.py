@@ -23,6 +23,7 @@ CONVERGENCE = 1e-5      # Ranker.java:25
 MAX_ITERATIONS = 100    # Ranker.java:26
 TFIDF_WEIGHT = 0.7      # Ranker.java:27
 PAGERANK_WEIGHT = 0.3   # Ranker.java:28
+SNIPPET_WINDOW = 15     # Ranker.java:548-566
 
 
 def section_weight_col(section_col: str = "section"):
@@ -58,7 +59,14 @@ def tfidf_scores(
             F.col("freq") / F.col("document_size") * section_weight_col() * F.col("idf"),
         )
     )
-    return scored.groupBy(doc_col).agg(F.sum("contrib").alias("tfidf"))
+    # each doc's addends summed in ascending order: a plain F.sum adds them
+    # in partition-merge order, so the low bits of a score (and with them
+    # ties and page order) would depend on the partitioning
+    return scored.groupBy(doc_col).agg(
+        F.aggregate(
+            F.array_sort(F.collect_list("contrib")), F.lit(0.0), lambda a, x: a + x
+        ).alias("tfidf")
+    )
 
 
 def tfidf_scores_onepass(
@@ -478,7 +486,7 @@ def paginate(
 def snippets(
     postings: DataFrame,
     hit_terms: list[str],
-    window: int = 15,
+    window: int = SNIPPET_WINDOW,
     doc_col: str = "doc_id",
     docs: DataFrame | None = None,
     desc_col: str = "description",

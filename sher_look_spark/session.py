@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "sher-look-spark",
@@ -87,6 +89,10 @@ def get_spark(
         # co-located cluster); never idle a core waiting for locality.
         .config("spark.locality.wait", "0s")
         .config("spark.ui.enabled", "false")
+        # Python workers import sher_look_spark by name; put the package
+        # root on their path, so that a driver started outside the repo
+        # (without PYTHONPATH) does not leave every worker failing to import
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -39,6 +39,39 @@ def test_tfidf_reference_golden(spark):
     assert got[3] == pytest.approx(0.0149, abs=1e-3)
 
 
+def test_tfidf_does_not_depend_on_partitioning(spark):
+    """The same postings over 1 and 8 partitions give bit-identical tf-idf
+    per doc: each doc's (word, section) addends are summed in one fixed
+    order, not in partition-merge order."""
+    import math
+    import random
+
+    from sher_look_spark.operators.indexer import document_sizes
+    from sher_look_spark.operators.ranking import tfidf_scores
+
+    rnd = random.Random(11)
+    words = [f"w{i}" for i in range(8)]
+    rows = [
+        (d, rnd.choice(["title", "header", "body"]), rnd.choice(words), p)
+        for d in range(40)
+        for p in range(rnd.randint(5, 60))
+    ]
+    postings = spark.createDataFrame(rows, "doc_id long, section string, word string, position int")
+    sizes = document_sizes(postings)
+    idf = spark.createDataFrame(
+        [(w, math.log(40 / (i + 1) + 1) * (1 + rnd.random())) for i, w in enumerate(words)],
+        "word string, idf double",
+    )
+
+    def scores(n: int) -> dict[int, float]:
+        ranked = tfidf_scores(postings.repartition(n), sizes, idf, words)
+        return {r.doc_id: r.tfidf for r in ranked.collect()}
+
+    one = scores(1)
+    assert len(one) == 40
+    assert scores(8) == one
+
+
 def _pr(spark, ids, links):
     from sher_look_spark.operators.ranking import pagerank
 

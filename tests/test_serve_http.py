@@ -1,5 +1,6 @@
 """The HTTP serve tier (scripts/serve_http.py): crawl -> index -> page-rank
--> GET /search end-to-end, result cache included."""
+-> GET /search end-to-end, answered from the resident index
+(operators/resident.py) exactly as Spark's search_pages answers."""
 
 from __future__ import annotations
 
@@ -10,36 +11,124 @@ import urllib.request
 from http.server import ThreadingHTTPServer
 from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 from sher_look_spark.crawler import synth
 from sher_look_spark.crawler.engine import CrawlConfig, CrawlEngine
 from sher_look_spark.crawler.storage import SnapshotStore
+from sher_look_spark.operators.resident import ResidentIndex
 from sher_look_spark.operators.webindex import index_incremental, store_pagerank
 
+# 40 seed pages on 40 hosts, crawled to depth 0. Every page has 12 on-host
+# links, so no link joins two crawled pages: page ranks are all equal, doc
+# sizes differ only by the stop words among 40 body words, and a query term
+# that every page's anchors carry ("7", from "link 7") ties many docs.
+WEB = synth.SynthWebConfig(
+    n_hosts=100, pages_per_host=100, min_links=12, max_links=12, external_pct=0,
+    img_min=16, img_max=32, timeout_pct=0, seed=33,
+)
+SEEDS = [synth.page_url(WEB, h, 1 + h % 5) for h in range(40)]
+# dropped from the served idf table: its hits score with the missing-idf
+# default (0.0 for keywords, 1.0 in phrase mode)
+NO_IDF = "spark"
+TIE_QUERY = "7"
 
-def test_search_endpoint_end_to_end(spark, tmp_path, monkeypatch):
-    from serve_http import make_handler
+# (query, page, per_page), each aimed at one way the resident index could
+# drift from search_pages
+KEYS = [
+    ("synthetic", 1, 5),
+    ("crawl frontier wave rank", 1, 10),  # many addends per doc
+    ("crawl crawl shuffle", 2, 10),  # a repeated token counts twice
+    (NO_IDF, 1, 10),  # only idf-less hits: tf-idf 0, ranked anyway
+    (f"{NO_IDF} crawl", 3, 5),
+    ('"synthetic 7"', 1, 10),  # adjacent kept tokens
+    ('"synthetic page"', 1, 5),  # stop word: snippet terms from split()
+    ('"host,"', 1, 10),  # no snippet hit: description fallback
+    (f'"{NO_IDF}" AND "crawl"', 1, 10),
+    (f'"{NO_IDF}" OR "wave"', 2, 10),
+    ('"crawl" NOT "wave"', 1, 10),
+    ('"crawl" "rank"', 1, 10),  # no operator: AND
+    ('""', 1, 10),  # phrase mode without a phrase
+    ("the of", 1, 10),  # stop words only
+]
 
-    web = synth.SynthWebConfig(n_hosts=4, pages_per_host=6, seed=33, timeout_pct=0)
-    state = str(tmp_path / "serve")
-    eng = CrawlEngine(spark, state, CrawlConfig(max_pages=500, max_depth=1, web=web))
-    eng.run(synth.seed_urls(web, 3))
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory) -> str:
+    """The state dir of WEB's crawl, indexed and page-ranked, whose latest
+    snapshot serves an idf table without NO_IDF."""
+    state = str(tmp_path_factory.mktemp("served") / "state")
+    CrawlEngine(spark, state, CrawlConfig(max_pages=500, max_depth=0, web=WEB)).run(SEEDS)
     store = SnapshotStore(state)
     assert index_incremental(spark, store)["indexed"] > 0
-    meta = store_pagerank(spark, store)
-    assert meta.filter(meta.page_rank.isNotNull()).count() > 0
+    store_pagerank(spark, store)
+    idf = store.read(spark, "idf").filter(F.col("word") != NO_IDF)
+    store.commit(replaces={"idf": [store.stage_write(idf, "idf", 0)]})
+    return state
 
-    # the serve path must read the PREBUILT index — any call to the
-    # on-the-fly indexer on the warm path is the round-2 anti-pattern
+
+def _direct(spark, state: str, query: str, page: int, per_page: int) -> list[tuple]:
+    from sher_look_spark.operators.webindex import search_pages
+
+    return [tuple(r) for r in search_pages(spark, state, query, page, per_page).collect()]
+
+
+def _tie_cut(index: ResidentIndex) -> int:
+    """A page size at which two tied docs of TIE_QUERY fall on pages 1 and 2."""
+    scores = [r[2] for r in index.search(TIE_QUERY, 1, 1000)]
+    return next(i for i in range(3, len(scores)) if scores[i] == scores[i - 1])
+
+
+def test_resident_answers_equal_spark_search_pages(spark, served):
+    index = ResidentIndex.load(served, SnapshotStore(served).latest())
+    cut = _tie_cut(index)
+    for key in KEYS + [(TIE_QUERY, 1, cut), (TIE_QUERY, 2, cut)]:
+        got = index.search(*key)
+        assert got == _direct(spark, served, *key), key
+        if key[0] == NO_IDF:
+            assert got, "docs whose hits have no idf must still rank"
+
+
+def test_pages_split_one_ranked_list(spark, served):
+    """Pages 1..k of search_pages together are exactly the top k*per_page
+    of one call: score ties across a page boundary neither repeat nor drop
+    a doc."""
+    index = ResidentIndex.load(served, SnapshotStore(served).latest())
+    per_page, k = 5, 3
+    scores = [r[2] for r in index.search(TIE_QUERY, 1, per_page * k + 1)]
+    assert any(
+        scores[b - 1] == scores[b] for b in range(per_page, per_page * k + 1, per_page)
+    ), "no tie straddles a page boundary"
+    pages = [r for p in range(1, k + 1) for r in _direct(spark, served, TIE_QUERY, p, per_page)]
+    assert len({r[0] for r in pages}) == len(pages), "a doc on two pages"
+    top = _direct(spark, served, TIE_QUERY, 1, per_page * k)
+    assert sorted(pages, key=lambda r: (-r[2], r[0])) == top
+
+
+def test_search_endpoint_end_to_end(spark, served, monkeypatch):
+    from serve_http import make_handler
+
+    want = [
+        {"url": u, "title": t, "score": s, "snippet": sn}
+        for u, t, s, sn in _direct(spark, served, "synthetic page", 1, 5)
+    ]
+    # the warm serve path answers from the resident index: any call to the
+    # on-the-fly indexer or to the Spark search plan is a regression
     import sher_look_spark.operators.webindex as wx
 
     def _no_reindex(pages):
         raise AssertionError("serve path re-indexed despite a prebuilt index")
 
-    monkeypatch.setattr(wx, "index_pages", _no_reindex)
+    def _no_spark_search(*args, **kwargs):
+        raise AssertionError("serve path ran a Spark search plan")
 
-    server = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(spark, state))
+    monkeypatch.setattr(wx, "index_pages", _no_reindex)
+    monkeypatch.setattr(wx, "search_pages", _no_spark_search)
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(spark, served))
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
@@ -51,7 +140,8 @@ def test_search_endpoint_end_to_end(spark, tmp_path, monkeypatch):
         first = body["results"][0]
         assert set(first) == {"url", "title", "score", "snippet"}
         assert first["url"].startswith("http://host")
-        # second hit serves from the result cache (same payload, no recompute)
+        assert body["results"] == want
+        # a repeat is answered again, identically
         body2 = json.loads(urllib.request.urlopen(url, timeout=30).read())
         assert body2 == body
         # non-search paths 404
@@ -72,10 +162,52 @@ def test_search_endpoint_end_to_end(spark, tmp_path, monkeypatch):
         server.shutdown()
 
 
+def test_concurrent_requests_across_index_swaps(spark, served):
+    """More request threads than cores while new snapshots land, each one
+    swapping the resident index: every answer, during and after the swaps,
+    is the whole answer of the (unchanged) tables."""
+    from serve_http import make_handler
+
+    store = SnapshotStore(served)
+    want = [
+        {"url": u, "title": t, "score": s, "snippet": sn}
+        for u, t, s, sn in ResidentIndex.load(served, store.latest()).search("crawl wave", 1, 10)
+    ]
+    server = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(spark, served))
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{server.server_address[1]}/search?query=crawl+wave&resultsPerPage=10"
+    wrong = []
+
+    def client():
+        for _ in range(20):
+            results = json.loads(urllib.request.urlopen(url, timeout=60).read())["results"]
+            if results != want:
+                wrong.append(results)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        clients = [threading.Thread(target=client) for _ in range(8)]
+        for c in clients:
+            c.start()
+        for _ in range(10):
+            store.commit()  # same tables under a new snapshot id: a swap
+        for c in clients:
+            c.join(timeout=120)
+        assert not any(c.is_alive() for c in clients)
+        last = json.loads(urllib.request.urlopen(url, timeout=60).read())["results"]
+    finally:
+        sys.setswitchinterval(interval)
+        server.shutdown()
+    assert not wrong
+    assert last == want
+
+
 def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
-    """A cached answer must not outlive its snapshot: once more pages are
-    crawled, indexed and page-ranked, the same GET answers what a direct
-    search_pages call answers on the new snapshot."""
+    """An answer must not outlive its snapshot: once more pages are
+    crawled, indexed and page-ranked, the server swaps in the new snapshot's
+    resident index and the same GET answers what a direct search_pages call
+    answers on the new snapshot."""
     from serve_http import make_handler
 
     from sher_look_spark.operators.webindex import search_pages
