@@ -15,8 +15,8 @@ Requests run no Spark plan. The server holds one immutable resident index
 (operators/resident.py: the latest snapshot's postings, documents_meta,
 page_rank and idf as numpy arrays) and answers from it exactly what
 operators/webindex.search_pages answers. The index is built in make_handler
-and rebuilt, under a lock, when a request sees a new latest snapshot id (a
-new index_incremental / store_pagerank commit), so an answer is never
+and rebuilt, under a lock, when a request sees a newer latest snapshot id
+(a new index_incremental / store_pagerank commit), so an answer is never
 staler than the snapshot the request saw. With answers this cheap there is
 no result cache. Only a snapshot with crawl tables but no index tables yet
 goes through Spark (search_pages' on-the-fly indexing path); no state at all
@@ -53,7 +53,9 @@ def make_handler(spark, state_dir: str):
         if snap is None:
             return []
         with swap_lock:
-            if served[0] != snap.snapshot_id:
+            # only forward: a newer index is no staler than the request's
+            # snapshot, and swapping back would reload on every other request
+            if served[0] is None or served[0] < snap.snapshot_id:
                 served = (snap.snapshot_id, ResidentIndex.load(state_dir, snap))
             index = served[1]
         if index is not None:

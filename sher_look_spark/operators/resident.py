@@ -34,15 +34,13 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from sher_look_spark.functions.text import tokenize_py
-from sher_look_spark.operators import query_parse
+from sher_look_spark.operators import query_parse, webindex
 from sher_look_spark.operators.ranking import (
     PAGERANK_WEIGHT,
     SECTION_WEIGHTS,
     SNIPPET_WINDOW,
     TFIDF_WEIGHT,
 )
-
-INDEX_TABLES = ("postings", "documents_meta", "idf")
 
 
 def _read(root: str, rels: list[str], columns: list[str]) -> pa.Table:
@@ -60,10 +58,8 @@ class ResidentIndex:
     """One snapshot's index, immutable once loaded (safe to share between
     request threads)."""
 
-    def __init__(self, snapshot_id: int, postings: pa.Table, meta: pa.Table,
-                 ranks: pa.Table | None, idf: pa.Table):
-        self.snapshot_id = snapshot_id
-
+    def __init__(self, postings: pa.Table, meta: pa.Table, ranks: pa.Table | None,
+                 idf: pa.Table):
         # per-doc arrays, ordered by doc_id
         doc_ids = meta.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
         order = np.argsort(doc_ids, kind="stable")
@@ -121,11 +117,10 @@ class ResidentIndex:
     def load(cls, root: str, snap) -> ResidentIndex | None:
         """The index of snapshot ``snap`` (a ``storage.Snapshot``) under
         ``root``, or None when the snapshot has no index tables yet."""
-        if snap is None or not all(snap.tables.get(t) for t in INDEX_TABLES):
+        if not webindex.has_index(snap):
             return None
         rels = snap.tables
         return cls(
-            snap.snapshot_id,
             _read(root, rels["postings"], ["doc_id", "section", "word", "position"]),
             _read(root, rels["documents_meta"],
                   ["doc_id", "url", "title", "description", "document_size", "page_rank"]),

@@ -20,10 +20,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sher_look_spark.crawler.storage import SnapshotStore
+from sher_look_spark.crawler.storage import Snapshot, SnapshotStore
 from sher_look_spark.functions.hashing import url_hash64
 from sher_look_spark.functions.htmlparse import extract_fields
 from sher_look_spark.functions.text import kept_tokens_column
+
+# the tables of a snapshot's prebuilt index; search_pages indexes the pages
+# of a snapshot without all of them on the fly
+INDEX_TABLES = ("postings", "documents_meta", "idf")
+
+
+def has_index(snap: Snapshot | None) -> bool:
+    """Whether ``snap`` holds a prebuilt index (``index_incremental`` ran)."""
+    return snap is not None and all(snap.tables.get(t) for t in INDEX_TABLES)
+
 
 PARSE_SCHEMA = T.StructType(
     [
@@ -210,13 +220,16 @@ def store_pagerank(spark: SparkSession, store: SnapshotStore) -> DataFrame:
     return read_documents_meta(spark, store)
 
 
-def read_documents_meta(spark: SparkSession, store: SnapshotStore) -> DataFrame | None:
-    """documents_meta with the latest page_rank table joined in (the read
-    side of store_pagerank's column-delta write)."""
-    meta = store.read(spark, "documents_meta")
+def read_documents_meta(
+    spark: SparkSession, store: SnapshotStore, snap: Snapshot | None = None
+) -> DataFrame | None:
+    """documents_meta with the page_rank table of ``snap`` (default: the
+    latest snapshot) joined in (the read side of store_pagerank's
+    column-delta write)."""
+    meta = store.read(spark, "documents_meta", snap)
     if meta is None:
         return None
-    prt = store.read(spark, "page_rank")
+    prt = store.read(spark, "page_rank", snap)
     if prt is None:
         return meta
     return (
@@ -267,16 +280,17 @@ def search_pages(
     from sher_look_spark.operators.ranking import snippets
 
     store = SnapshotStore(state_dir)
-    postings = store.read(spark, "postings")
-    meta = read_documents_meta(spark, store)
-    idf = store.read(spark, "idf")
-    if postings is not None and meta is not None and idf is not None:
+    snap = store.latest()
+    if has_index(snap):
+        postings = store.read(spark, "postings", snap)
+        meta = read_documents_meta(spark, store, snap)
+        idf = store.read(spark, "idf", snap)
         sizes = meta.select("doc_id", "document_size")
         pr = meta.select(
             F.col("doc_id").alias("id"), F.col("page_rank").alias("rank")
         ).filter(F.col("rank").isNotNull())
     else:  # cold fallback: no prebuilt index in the snapshot store
-        pages = store.read(spark, "pages")
+        pages = store.read(spark, "pages", snap)
         if pages is None:
             # no crawl state at all — empty result page, not an AttributeError
             # (the HTTP tier maps this to 200-with-empty, never a 500)

@@ -64,7 +64,8 @@ def served(spark, tmp_path_factory) -> str:
     CrawlEngine(spark, state, CrawlConfig(max_pages=500, max_depth=0, web=WEB)).run(SEEDS)
     store = SnapshotStore(state)
     assert index_incremental(spark, store)["indexed"] > 0
-    store_pagerank(spark, store)
+    meta = store_pagerank(spark, store)
+    assert meta.filter(meta.page_rank.isNotNull()).count() > 0
     idf = store.read(spark, "idf").filter(F.col("word") != NO_IDF)
     store.commit(replaces={"idf": [store.stage_write(idf, "idf", 0)]})
     return state
@@ -204,10 +205,12 @@ def test_concurrent_requests_across_index_swaps(spark, served):
 
 
 def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
-    """An answer must not outlive its snapshot: once more pages are
-    crawled, indexed and page-ranked, the server swaps in the new snapshot's
-    resident index and the same GET answers what a direct search_pages call
-    answers on the new snapshot."""
+    """An answer must not outlive its snapshot. A crawled but not yet
+    indexed state is answered through search_pages' on-the-fly indexing;
+    once it is indexed and page-ranked, and again once more pages are
+    crawled, indexed and page-ranked, the server swaps in the new
+    snapshot's resident index. Each time the same GET answers what a direct
+    search_pages call answers on the latest snapshot."""
     from serve_http import make_handler
 
     from sher_look_spark.operators.webindex import search_pages
@@ -216,10 +219,12 @@ def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
     state = str(tmp_path / "serve-stale")
     store = SnapshotStore(state)
 
-    def crawl_and_index(max_pages, seeds=None):
+    def crawl(max_pages, seeds=None):
         CrawlEngine(
             spark, state, CrawlConfig(max_pages=max_pages, max_depth=1, web=web)
         ).run(seeds)
+
+    def index():
         assert index_incremental(spark, store)["indexed"] > 0
         store_pagerank(spark, store)
 
@@ -230,16 +235,21 @@ def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
             for r in rows
         ]
 
-    crawl_and_index(3, synth.seed_urls(web, 3))
+    crawl(3, synth.seed_urls(web, 3))
+    assert ResidentIndex.load(state, store.latest()) is None
     server = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(spark, state))
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     url = f"http://127.0.0.1:{port}/search?query=synthetic+page&page=1&resultsPerPage=5"
     try:
+        unindexed = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
+        assert unindexed and unindexed == direct()
+        index()
         before = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
         assert before == direct()
-        crawl_and_index(500)
+        crawl(500)
+        index()
         want = direct()
         assert want != before, "the new snapshot must change this key's answer"
         after = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
