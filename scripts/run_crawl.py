@@ -70,7 +70,7 @@ def main() -> None:
         # (DatabaseHelper.updatePageRank :483) when the index tier has run
         if store.read(spark, "documents_meta") is not None:
             store_pagerank(spark, store)
-        print(json.dumps({"ranked": pr.count()}))
+        print(json.dumps({"ranked": store.read(spark, "pagerank").count()}))
     elif args.mode == "serve-query":
         from sher_look_spark.operators.webindex import search_pages
 

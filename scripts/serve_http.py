@@ -18,9 +18,9 @@ operators/webindex.search_pages answers. The index is built in make_handler
 and rebuilt, under a lock, when a request sees a newer latest snapshot id
 (a new index_incremental / store_pagerank commit), so an answer is never
 staler than the snapshot the request saw. With answers this cheap there is
-no result cache. Only a snapshot with crawl tables but no index tables yet
-goes through Spark (search_pages' on-the-fly indexing path); no state at all
-answers an empty page.
+no result cache. No request runs Spark: a snapshot that is not indexed yet
+(or no state at all) answers an empty page, as search_pages does. The
+``spark`` argument of make_handler is kept for callers and not used.
 """
 
 from __future__ import annotations
@@ -38,7 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def make_handler(spark, state_dir: str):
     from sher_look_spark.crawler.storage import SnapshotStore
-    from sher_look_spark.operators import webindex
     from sher_look_spark.operators.resident import ResidentIndex
 
     store = SnapshotStore(state_dir)
@@ -58,13 +57,11 @@ def make_handler(spark, state_dir: str):
             if served[0] is None or served[0] < snap.snapshot_id:
                 served = (snap.snapshot_id, ResidentIndex.load(state_dir, snap))
             index = served[1]
-        if index is not None:
-            rows = index.search(query, page, per_page)
-        else:
-            rows = webindex.search_pages(spark, state_dir, query, page, per_page).collect()
+        if index is None:
+            return []
         return [
             {"url": url, "title": title, "score": score, "snippet": snippet}
-            for url, title, score, snippet in rows
+            for url, title, score, snippet in index.search(query, page, per_page)
         ]
 
     class Handler(BaseHTTPRequestHandler):

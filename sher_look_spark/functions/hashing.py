@@ -14,11 +14,8 @@ from __future__ import annotations
 import base64
 import hashlib
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
 
 
 def sha256_b64url(data: str | bytes) -> str:
@@ -38,26 +35,11 @@ def url_hash64(url: str) -> int:
     return int(hashlib.sha256(url.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def _hash_series(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: url_hash64(u) if u is not None else None)
-
-
-@pandas_udf(LongType())
-def url_hash64_udf(urls: pd.Series) -> pd.Series:
-    return _hash_series(urls)
-
-
-@pandas_udf(StringType())
-def sha256_b64url_udf(payload: pd.Series) -> pd.Series:
-    return payload.map(lambda b: sha256_b64url(b) if b is not None else None)
-
-
 def url_hash64_col(col: Column | str) -> Column:
     """JVM-expression twin of :func:`url_hash64` — bit-identical values
     (pinned by tests) without an ArrowEvalPython stage in the plan: sha2's
     hex output's first 15 chars ARE the first 60 bits, and conv(_, 16, 10)
-    re-reads them as the same non-negative int64. Null in -> null out,
-    matching the pandas UDF."""
+    re-reads them as the same non-negative int64. Null in -> null out."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.sha2(c, 256), 1, 15), 16, 10).cast("long")
 

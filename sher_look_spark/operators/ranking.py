@@ -2,20 +2,14 @@
 
 Reference: /root/reference/src/main/java/com/sherlook/search/ranker/Ranker.java.
 Numeric goldens ported from RankerTests.java (TF-IDF ±0.001, PageRank graphs).
+PageRank has one implementation for both the converging and the fixed-step
+mode: the whole power loop in one numpy task (:func:`pagerank`).
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-# pagerank() tunes session-global conf (shuffle partitions, AQE) around its
-# loop with save/restore. The serve tier shares one SparkSession across HTTP
-# threads, so two concurrent cold-path pageranks could interleave
-# save/mutate/restore and clobber the session settings — serialize them.
-_PAGERANK_CONF_LOCK = threading.Lock()
 
 SECTION_WEIGHTS = {"title": 2.0, "header": 1.5, "body": 1.0}  # Ranker.java:22-23
 DAMPING = 0.85          # Ranker.java:24
@@ -135,292 +129,59 @@ def pagerank(
     damping: float = DAMPING,
     tol: float = CONVERGENCE,
     max_iter: int = MAX_ITERATIONS,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
-    """Q8: power iteration with uniform dangling redistribution — exact
-    reference semantics (Ranker.java:128-187) including the quirk that on
-    convergence the PREVIOUS iterate is returned (the loop breaks before the
-    swap at :178).
+    """Q8: power iteration with uniform dangling redistribution, with the
+    reference's exact semantics (Ranker.java:128-187).
 
-    vertices: (id) — every node, linked or not; edges: (src, dst).
-    Returns (id, rank). Iterative DataFrame job; lineage cut by
-    localCheckpoint every ``checkpoint_every`` iterations so plans stay flat
-    at cluster scale.
+    vertices: (id), every node, linked or not, ids distinct; edges: (src,
+    dst). Returns (id, rank), unevaluated: its one action runs the loop.
 
-    ``tol <= 0`` selects FIXED-ITERATION mode with ZERO per-iteration driver
-    actions: the convergence check is dead code, so the dangling mass is
-    computed as a 1-row aggregate of the previous iterate cross-joined
-    (broadcast) into the next — exactly the shape of the fixed-step oracle
-    CTE chain in queries.sql_q8 — and all ``max_iter`` steps compile into a
-    handful of jobs (one per lineage checkpoint) instead of one per
-    iteration.
+    The whole loop runs in ONE Python task: the bare vertex and edge tables
+    cogroup on a constant key, and out degrees, the dangling set and every
+    step are numpy array ops. An edge counts toward its src's out degree
+    even when its dst is not a vertex; only edges with both ends in
+    ``vertices`` carry rank.
 
-    ``tol > 0`` (the reference's real mode, tol=1e-5 / <=100 iters,
-    Ranker.java:24-26) ALSO avoids a driver action per iteration: dangling
-    mass folds into each step's plan the same broadcast-agg way, per-step
-    max-diffs are 1-row aggregates unioned and collected ONCE per
-    ``checkpoint_every`` stride, and on convergence the exact reference
-    output — the iterate that ENTERED the first step whose diff < tol, the
-    previous-iterate quirk — is returned from the stride's persisted chain.
-    Driver actions: ~2 per stride instead of 1+ per iteration.
+    ``tol > 0`` (the reference's mode, tol=1e-5 and at most 100 steps,
+    Ranker.java:24-26): each step's max |cur - prev| is checked, and at the
+    first step below ``tol`` the iterate that ENTERED that step is returned
+    (the reference breaks before its swap at :178). ``tol <= 0`` runs
+    exactly ``max_iter`` steps (the fixed-step q8 oracle). The task holds
+    the graph in one worker's memory; SCALE.md has the measured bound.
     """
-    # n first, from the vertex table alone (left-joining out_deg preserves
-    # the count): the fused single-partition path below then needs NO eager
-    # materialization of the edge derivation — its one cogroup job performs
-    # scan+out-degree+loop together, where the previous setup ran the edge
-    # distinct + degree join + a stats collect serially before the loop.
-    n = vertices.count()
-    if n == 0:
-        return vertices.withColumn("rank", F.lit(0.0))
-
-    base = (1.0 - damping) / n
-    fixed = tol <= 0.0
-
-    # Size the iteration shuffles to the GRAPH, not the session default:
-    # every iterate is a rank vector of n rows, so partitions ~ n/65k keeps
-    # tasks meaningful at 10^9 vertices and collapses to 1 task for small
-    # graphs (where per-task scheduling overhead would dominate the loop).
-    # Restored in the finally below; cached-plan AQE coalescing is enabled
-    # session-wide (session.py) but static sizing also covers plan reuse.
-    sp_key = "spark.sql.shuffle.partitions"
-    aqe_key = "spark.sql.adaptive.enabled"
-    with _PAGERANK_CONF_LOCK:
-        sp_old = spark.conf.get(sp_key)
-        aqe_old = spark.conf.get(aqe_key)
-        loop_parts = max(1, min(int(sp_old), n // 65_536 + 1))
-        spark.conf.set(sp_key, str(loop_parts))
-        if loop_parts == 1:
-            # single-partition iterates: AQE has nothing to coalesce or
-            # re-plan, but it would still submit one job per stage
-            # materialization (~8 jobs/iteration measured) — pure
-            # scheduling overhead here.
-            spark.conf.set(aqe_key, "false")
-        try:
-            if fixed and loop_parts == 1:
-                # Graph fits ONE shuffle partition: every iterate would
-                # execute as a single task anyway, so the per-iteration
-                # DataFrame plumbing (Catalyst analysis of a growing plan
-                # ~0.35 s/step, checkpoint actions, per-step broadcasts —
-                # measured 5-11 s for 8 steps on a 25-node graph) is pure
-                # scheduling overhead. Run the whole fixed power iteration
-                # as vectorized numpy inside that one task instead (guide
-                # §4.2: Spark distributes, native code computes) — identical
-                # formula, one job (edges are referenced once, so nothing
-                # here is persisted). Graphs above 65k vertices keep the
-                # chained distributed loop below.
-                return _pagerank_fused(
-                    spark, vertices, edges, n, base, damping, max_iter
-                )
-            edges = edges.persist()  # every iteration joins against it
-            out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-                F.count(F.lit(1)).alias("out_degree")
-            )
-            verts = (
-                vertices.join(out_deg, "id", "left").fillna({"out_degree": 0}).persist()
-            )
-            n_dangling = (
-                verts.agg(
-                    F.sum(F.when(F.col("out_degree") == 0, 1).otherwise(0))
-                ).collect()[0][0]
-                or 0
-            )
-            prev = verts.select(
-                "id", "out_degree", F.lit(1.0 / n).alias("rank")
-            ).persist()
-            dangling_mass = n_dangling * (1.0 / n)
-            return _pagerank_loop(
-                spark, verts, edges, prev, n, base, damping, dangling_mass,
-                tol, max_iter, checkpoint_every, fixed,
-            )
-        finally:
-            spark.conf.set(sp_key, sp_old)
-            spark.conf.set(aqe_key, aqe_old)
-
-
-def _pagerank_fused(
-    spark, vertices, edges, n, base, damping, max_iter
-) -> DataFrame:
-    """Fixed-iteration power loop fused into ONE task for single-partition
-    graphs: the bare vertex and edge tables cogroup on a constant key; out
-    degrees, the dangling set and the loop all run as numpy array ops
-    (np.add.at scatter, boolean mask) — the same per-step formula as
-    _pagerank_loop's fixed mode, without 8x (plan analysis + shuffle +
-    broadcast) scheduling cost, and without materializing the degree join
-    at all (each cogroup side scans its input exactly once — an earlier
-    shape that joined a Spark-side out_deg into the vertex side re-ran the
-    whole edge derivation on both sides). The result is localCheckpoint'ed
-    so callers see the same materialized-frame contract as the chained
-    path."""
     import pandas as pd
-
-    max_iter_ = int(max_iter)
-    base_ = float(base)
-    damping_ = float(damping)
-    n_ = int(n)
 
     def power(_key, vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         ids = vpdf["id"].to_numpy()
-        idx = {int(v): i for i, v in enumerate(ids)}
-        src = np.fromiter((idx.get(int(s), -1) for s in epdf["src"]), dtype="int64", count=len(epdf))
-        dst = np.fromiter((idx.get(int(d), -1) for d in epdf["dst"]), dtype="int64", count=len(epdf))
-        # out_degree counts EVERY edge leaving a vertex — including edges to
-        # ids outside `vertices` — matching the chained path's divisor
-        # (edges.groupBy(src).count before any dst filtering)
-        outd = np.zeros(n_, dtype="float64")
-        if len(src):
-            np.add.at(outd, src[src >= 0], 1.0)
-        # only edges with BOTH endpoints in the vertex set scatter rank —
-        # the chained path's src equi-join + verts left join semantics
+        n = len(ids)
+        if n == 0:
+            return pd.DataFrame({"id": ids, "rank": np.zeros(0)})
+        index = pd.Index(ids)  # -1 for an id outside the vertex set
+        src = index.get_indexer(epdf["src"])
+        dst = index.get_indexer(epdf["dst"])
+        outd = np.bincount(src[src >= 0], minlength=n).astype("float64")
         keep = (src >= 0) & (dst >= 0)
         src, dst = src[keep], dst[keep]
         dangling = outd == 0.0
-        rank = np.full(n_, 1.0 / n_, dtype="float64")
-        for _ in range(max_iter_):
-            dm = float(rank[dangling].sum())
-            in_sum = np.zeros(n_, dtype="float64")
-            if len(src):
-                np.add.at(in_sum, dst, rank[src] / outd[src])
-            rank = base_ + damping_ * (in_sum + dm / n_)
-        return pd.DataFrame({"id": ids, "rank": rank})
+        base = (1.0 - damping) / n
+        prev = np.full(n, 1.0 / n)
+        for _ in range(max_iter):
+            dm = float(prev[dangling].sum())
+            in_sum = np.bincount(dst, weights=prev[src] / outd[src], minlength=n)
+            cur = base + damping * (in_sum + dm / n)
+            if tol > 0.0 and float(np.abs(cur - prev).max()) < tol:
+                break
+            prev = cur
+        return pd.DataFrame({"id": ids, "rank": prev})
 
-    out = (
+    return (
         vertices.select("id")
         .groupBy(F.lit(0).alias("_g"))
         .cogroup(edges.select("src", "dst").groupBy(F.lit(0).alias("_g")))
         .applyInPandas(power, "id long, rank double")
-        .localCheckpoint(eager=True)
     )
-    return out
-
-
-def _pagerank_loop(
-    spark, verts, edges, prev, n, base, damping, dangling_mass,
-    tol, max_iter, checkpoint_every, fixed,
-) -> DataFrame:
-
-    def _contribs(it: DataFrame) -> DataFrame:
-        return (
-            it.join(edges, it.id == edges.src)
-            .select(F.col("dst").alias("id"), (F.col("rank") / F.col("out_degree")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-
-    if fixed:
-        # lineage checkpoint stride: each eager checkpoint is a driver
-        # action; the cached iterates between checkpoints execute as chained
-        # stages of ONE job, so actions drop from max_iter to max_iter/stride.
-        stride = checkpoint_every
-        handles: list[DataFrame] = [prev]
-        for i in range(max_iter):
-            dang = prev.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))), F.lit(0.0)
-                ).alias("_dm")
-            )
-            cur = (
-                verts.join(_contribs(prev), "id", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "id",
-                    "out_degree",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.col("_dm") / n)
-                    ).alias("rank"),
-                )
-            )
-            last = i + 1 == max_iter
-            if last or (i + 1) % stride == 0:
-                cur = cur.localCheckpoint(eager=True)  # one action per stride
-                for h in handles:
-                    h.unpersist()
-                handles = []
-            else:
-                cur = cur.persist()
-                handles.append(cur)
-            prev = cur
-        result = prev.select("id", "rank")
-        verts.unpersist()
-        edges.unpersist()
-        return result
-
-    # Convergence mode, stride-batched: build `checkpoint_every` iterates as
-    # a persisted chain (dangling folded into each step's plan as a
-    # broadcast 1-row agg — same shape as fixed mode), then ONE collect of
-    # the unioned per-step max-diff aggregates decides whether any step in
-    # the stride converged. The reference breaks BEFORE the swap
-    # (Ranker.java:178), returning the iterate that entered the converged
-    # step — that iterate is still persisted in the chain, so batching the
-    # check changes the action count, not the output.
-    from functools import reduce
-
-    stride = max(1, checkpoint_every)
-    it_done = 0
-    while it_done < max_iter:
-        k = min(stride, max_iter - it_done)
-        iterates = [prev]
-        diffs = []
-        for s in range(1, k + 1):
-            p = iterates[-1]
-            dang = p.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))), F.lit(0.0)
-                ).alias("_dm")
-            )
-            cur = (
-                verts.join(_contribs(p), "id", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "id",
-                    "out_degree",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.col("_dm") / n)
-                    ).alias("rank"),
-                )
-                .persist()
-            )
-            iterates.append(cur)
-            diffs.append(
-                cur.alias("c")
-                .join(p.alias("p"), "id")
-                .agg(
-                    F.lit(s).alias("step"),
-                    F.max(F.abs(F.col("c.rank") - F.col("p.rank"))).alias("max_diff"),
-                )
-            )
-        # materialize the chain tip first (one job computes every persisted
-        # iterate), then the diff collect reads only cached data
-        tip = iterates[-1].localCheckpoint(eager=True)
-        stats = sorted(
-            reduce(DataFrame.unionByName, diffs).collect(), key=lambda r: r.step
-        )
-        conv = next(
-            (r.step for r in stats if r.max_diff is not None and r.max_diff < tol),
-            None,
-        )
-        if conv is not None:
-            out = iterates[conv - 1].localCheckpoint(eager=True)
-            for h in iterates:
-                h.unpersist()
-            # tip is this stride's chain checkpoint, not the returned frame —
-            # drop it or a long-lived serve session leaks one RDD per call
-            tip.unpersist()
-            prev = out
-            break
-        for h in iterates:
-            h.unpersist()
-        prev = tip
-        it_done += k
-    result = prev.select("id", "rank")
-    verts.unpersist()
-    edges.unpersist()
-    return result
 
 
 def blend_scores(tfidf: DataFrame, pr: DataFrame, doc_col: str = "doc_id") -> DataFrame:

@@ -2,7 +2,7 @@
 `serve` run modes (Application.java:15-48) as DataFrame jobs over the crawl
 engine's snapshot tables.
 
-index_pages: pages(html) -> postings/doc-metadata/sizes/IDF with the
+index_pages: pages(html) -> postings/doc-metadata/sizes with the
 reference's exact extraction semantics (functions/htmlparse.py) and
 kept-token positions running title -> document-order sections.
 
@@ -10,7 +10,7 @@ pagerank_from_links: the link graph exactly as DatabaseHelper.getLinks
 (:451-466) builds it — edges only between crawled documents (target URL
 resolved against the documents table), every crawled doc a vertex.
 
-search_pages: Q1-Q11 end-to-end over a crawl state dir.
+search_pages: Q1-Q11 end-to-end over a crawl state dir's prebuilt index.
 """
 
 from __future__ import annotations
@@ -21,12 +21,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sher_look_spark.crawler.storage import Snapshot, SnapshotStore
-from sher_look_spark.functions.hashing import url_hash64
+from sher_look_spark.functions.hashing import url_hash64_col
 from sher_look_spark.functions.htmlparse import extract_fields
 from sher_look_spark.functions.text import kept_tokens_column
 
-# the tables of a snapshot's prebuilt index; search_pages indexes the pages
-# of a snapshot without all of them on the fly
+# the tables of a snapshot's prebuilt index; a snapshot without all of them
+# answers every search with an empty page
 INDEX_TABLES = ("postings", "documents_meta", "idf")
 
 
@@ -68,14 +68,15 @@ def _parse_udf():
 
 
 def index_pages(pages: DataFrame) -> dict[str, DataFrame]:
-    """pages(url, html, ...) -> {documents_meta, postings, doc_sizes, idf}."""
-    from pyspark.sql.functions import pandas_udf
+    """pages(url, html, ...) -> {documents_meta, postings, doc_sizes, parsed}.
 
-    @pandas_udf(T.LongType())
-    def uh(urls: pd.Series) -> pd.Series:
-        return urls.map(url_hash64)
-
-    parsed = pages.withColumn("p", _parse_udf()("html")).withColumn("doc_id", uh("url")).persist()
+    ``parsed`` is the persisted parse that the other three frames read; the
+    caller unpersists it once they are written."""
+    parsed = (
+        pages.withColumn("p", _parse_udf()("html"))
+        .withColumn("doc_id", url_hash64_col("url"))
+        .persist()
+    )
     meta = parsed.select(
         "doc_id", "url", F.col("p.title").alias("title"),
         F.col("p.description").alias("description"),
@@ -97,12 +98,12 @@ def index_pages(pages: DataFrame) -> dict[str, DataFrame]:
     postings = parsed.select("doc_id", F.posexplode(flat).alias("position", "sw")).select(
         "doc_id", "sw.section", "sw.word", "position"
     )
-    from sher_look_spark.operators.indexer import document_sizes, idf_table
+    from sher_look_spark.operators.indexer import document_sizes
 
     sizes = document_sizes(postings)
-    n_docs = pages.count()
-    idf = idf_table(postings, n_docs=n_docs)
-    return {"documents_meta": meta, "postings": postings, "doc_sizes": sizes, "idf": idf}
+    return {
+        "documents_meta": meta, "postings": postings, "doc_sizes": sizes, "parsed": parsed,
+    }
 
 
 def index_incremental(spark: SparkSession, store: SnapshotStore) -> dict[str, int]:
@@ -194,6 +195,7 @@ def index_incremental(spark: SparkSession, store: SnapshotStore) -> dict[str, in
     state["indexed_docs_total"] = n_docs_total
     store.commit(appends=appends, replaces=replaces, state=state)
     word_df.unpersist()
+    idx["parsed"].unpersist()
     todo.unpersist()
     return {"indexed": n}
 
@@ -241,23 +243,19 @@ def read_documents_meta(
 
 def pagerank_from_links(spark: SparkSession, store: SnapshotStore) -> DataFrame:
     """(id=url_hash, rank) over the crawled link graph (both-ends-crawled edges)."""
-    from pyspark.sql.functions import pandas_udf
-
     from sher_look_spark.operators.ranking import pagerank
-
-    @pandas_udf(T.LongType())
-    def uh(urls: pd.Series) -> pd.Series:
-        return urls.map(url_hash64)
 
     images = store.read(spark, "images")
     links = store.read(spark, "links")
     if images is None:  # no crawl state: empty graph, empty ranks
         return spark.createDataFrame([], "id long, rank double")
-    verts = images.select(uh("url").alias("id")).distinct()
+    verts = images.select(url_hash64_col("url").alias("id")).distinct()
     if links is None:
         return pagerank(spark, verts, spark.createDataFrame([], "src long, dst long"))
     edges = (
-        links.select(uh("parent_url").alias("src"), uh("child_url").alias("dst"))
+        links.select(
+            url_hash64_col("parent_url").alias("src"), url_hash64_col("child_url").alias("dst")
+        )
         .join(verts.select(F.col("id").alias("dst")), "dst", "left_semi")
     )
     return pagerank(spark, verts, edges)
@@ -271,8 +269,8 @@ def search_pages(
     Serves from the PREBUILT index — postings / documents_meta / idf /
     page_rank as written by ``index_incremental`` + ``store_pagerank`` — the
     way the reference serves from its DatabaseHelper tables
-    (web/SearchController.java:41-90). Indexing on the fly happens only as a
-    cold fallback when no index snapshot exists. Snippets are generated
+    (web/SearchController.java:41-90). A snapshot without that index (or no
+    crawl state at all) answers an empty page. Snippets are generated
     AFTER pagination, for just the page's ≤ per_page docs (reference order:
     Ranker.java:623-637 -> :527-621) — corpus-wide snippet generation is
     unbounded for a frequent term."""
@@ -281,26 +279,17 @@ def search_pages(
 
     store = SnapshotStore(state_dir)
     snap = store.latest()
-    if has_index(snap):
-        postings = store.read(spark, "postings", snap)
-        meta = read_documents_meta(spark, store, snap)
-        idf = store.read(spark, "idf", snap)
-        sizes = meta.select("doc_id", "document_size")
-        pr = meta.select(
-            F.col("doc_id").alias("id"), F.col("page_rank").alias("rank")
-        ).filter(F.col("rank").isNotNull())
-    else:  # cold fallback: no prebuilt index in the snapshot store
-        pages = store.read(spark, "pages", snap)
-        if pages is None:
-            # no crawl state at all — empty result page, not an AttributeError
-            # (the HTTP tier maps this to 200-with-empty, never a 500)
-            return spark.createDataFrame(
-                [], "url string, title string, final_score double, snippet string"
-            )
-        idx = index_pages(pages)
-        postings, meta = idx["postings"], idx["documents_meta"]
-        sizes, idf = idx["doc_sizes"], idx["idf"]
-        pr = pagerank_from_links(spark, store)
+    if not has_index(snap):
+        return spark.createDataFrame(
+            [], "url string, title string, final_score double, snippet string"
+        )
+    postings = store.read(spark, "postings", snap)
+    meta = read_documents_meta(spark, store, snap)
+    idf = store.read(spark, "idf", snap)
+    sizes = meta.select("doc_id", "document_size")
+    pr = meta.select(
+        F.col("doc_id").alias("id"), F.col("page_rank").alias("rank")
+    ).filter(F.col("rank").isNotNull())
     parsed = parse_query(query)
     # materialize the page slice once (≤ per_page rows): its plan — the whole
     # ranking pipeline — is consumed three times below (meta join, postings

@@ -1176,9 +1176,8 @@ def sql_q1() -> str:
 
 
 # 8 fixed steps discriminate fully (dangling/damping/join errors diverge by
-# step 2 and compound); tol=0 selects the ZERO-per-iteration-collect chained
-# execution in operators.ranking.pagerank, so the whole power iteration runs
-# as ~2 jobs instead of one driver action per step.
+# step 2 and compound); tol=0 makes operators.ranking.pagerank run exactly
+# that many steps, with no convergence break.
 PAGERANK_ORACLE_ITERS = 8
 
 

@@ -206,11 +206,11 @@ def test_concurrent_requests_across_index_swaps(spark, served):
 
 def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
     """An answer must not outlive its snapshot. A crawled but not yet
-    indexed state is answered through search_pages' on-the-fly indexing;
-    once it is indexed and page-ranked, and again once more pages are
-    crawled, indexed and page-ranked, the server swaps in the new
-    snapshot's resident index. Each time the same GET answers what a direct
-    search_pages call answers on the latest snapshot."""
+    indexed state answers an empty page; once it is indexed and
+    page-ranked, and again once more pages are crawled, indexed and
+    page-ranked, the server swaps in the new snapshot's resident index.
+    Each time the same GET answers what a direct search_pages call answers
+    on the latest snapshot."""
     from serve_http import make_handler
 
     from sher_look_spark.operators.webindex import search_pages
@@ -244,7 +244,7 @@ def test_new_snapshot_invalidates_cached_answer(spark, tmp_path):
     url = f"http://127.0.0.1:{port}/search?query=synthetic+page&page=1&resultsPerPage=5"
     try:
         unindexed = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
-        assert unindexed and unindexed == direct()
+        assert unindexed == [] and unindexed == direct()
         index()
         before = json.loads(urllib.request.urlopen(url, timeout=120).read())["results"]
         assert before == direct()

@@ -49,9 +49,9 @@ def test_crawl_index_search_end_to_end(spark, tmp_path):
     from sher_look_spark.crawler.engine import CrawlConfig, CrawlEngine
     from sher_look_spark.crawler.storage import SnapshotStore
     from sher_look_spark.operators.webindex import (
-        index_pages,
-        pagerank_from_links,
+        index_incremental,
         search_pages,
+        store_pagerank,
     )
 
     web = synth.SynthWebConfig(n_hosts=5, pages_per_host=8, seed=77, timeout_pct=0)
@@ -63,17 +63,18 @@ def test_crawl_index_search_end_to_end(spark, tmp_path):
     pages = store.read(spark, "pages")
     assert pages is not None and pages.count() > 0
 
-    idx = index_pages(pages)
-    meta = idx["documents_meta"].collect()
+    assert index_incremental(spark, store)["indexed"] == pages.count()
+    meta = store.read(spark, "documents_meta").collect()
     assert all(r.title.startswith("Synthetic page") for r in meta)
     # positions: title tokens come first for every doc
     first_tok = (
-        idx["postings"].filter("position = 0").select("section").distinct().collect()
+        store.read(spark, "postings").filter("position = 0").select("section").distinct().collect()
     )
     assert [r.section for r in first_tok] == ["title"]
 
-    pr = {r.id: r.rank for r in pagerank_from_links(spark, store).collect()}
-    assert pytest.approx(sum(pr.values()), abs=0.05) == 1.0
+    pr = [r.page_rank for r in store_pagerank(spark, store).collect()]
+    assert len(pr) == len(meta)
+    assert pytest.approx(sum(pr), abs=0.05) == 1.0
 
     # search for a vocabulary word known to exist in the synthetic corpus
     res = search_pages(spark, state, "frontier crawl", per_page=5).collect()
@@ -84,6 +85,28 @@ def test_crawl_index_search_end_to_end(spark, tmp_path):
     # phrase mode end-to-end
     res2 = search_pages(spark, state, '"synthetic page"', per_page=5).collect()
     assert len(res2) > 0
+
+
+def test_index_incremental_releases_its_caches(spark, tmp_path):
+    """An index run in a long-lived process leaves no persisted frame
+    behind, however many runs it makes."""
+    from sher_look_spark.crawler import synth
+    from sher_look_spark.crawler.engine import CrawlConfig, CrawlEngine
+    from sher_look_spark.crawler.storage import SnapshotStore
+    from sher_look_spark.operators.webindex import index_incremental
+
+    web = synth.SynthWebConfig(n_hosts=2, pages_per_host=4, seed=5, timeout_pct=0)
+    state = str(tmp_path / "leak")
+    CrawlEngine(spark, state, CrawlConfig(max_pages=6, max_depth=1, web=web)).run(
+        synth.seed_urls(web, 2)
+    )
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    assert index_incremental(spark, SnapshotStore(state))["indexed"] > 0
+    assert persisted() - before == set()
 
 
 def test_search_pages_empty_state_dir_returns_empty(spark, tmp_path):
